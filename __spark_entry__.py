@@ -12,6 +12,7 @@ DuckDB twin. Conventions for oracle parity (FIXTURES.md §3):
 
 from __future__ import annotations
 
+import inspect
 import sys
 from collections.abc import Callable
 
@@ -4386,379 +4387,11 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Driver-window bookkeeping: the external correctness runner emits
-    # rows for only the FIRST 50 entries, so the ordering rotates each
-    # round to move never-driver-checked queries into the window (all
-    # queries are locally oracle-checked regardless,
-    # tests/test_oracle_parity.py). Rounds 1-2 checked the q_distinct_shards
-    # window, round 3 the q_avro_contract window, round 4 the TPC-H /
-    # streaming-runtime / storage / sources window (50/50 green each
-    # time). _ROUND5_WINDOW below hoists 50 of the last 52
-    # never-driver-checked names; the 2 deferred to round 6 are
-    # q_locf and q_ema (simple window-function shapes, lowest-risk
-    # checks to delay).
-    q = {
-        "q_avro_contract": q_avro_contract,
-        "q_ts_similarity": q_ts_similarity,
-        "q_normalize_text": q_normalize_text,
-        "q_bigram_topk": q_bigram_topk,
-        "q_pmi_collocations": q_pmi_collocations,
-        "q_rake_keyphrases": q_rake_keyphrases,
-        "q_source_kl": q_source_kl,
-        "q_langid_confusion": q_langid_confusion,
-        "q_lix_readability": q_lix_readability,
-        "q_pack_bins": q_pack_bins,
-        "q_token_budget_shards": q_token_budget_shards,
-        "q_stratified_sample": q_stratified_sample,
-        "q_neyman_allocation": q_neyman_allocation,
-        "q_tfidf_topk": q_tfidf_topk,
-        "q_keyness": q_keyness,
-        "q_bm25_topk": q_bm25_topk,
-        "q_repetition": q_repetition,
-        "q_chunk_documents": q_chunk_documents,
-        "q_temperature_sample": q_temperature_sample,
-        "q_order_coverage": q_order_coverage,
-        "q_quantize_embeddings": q_quantize_embeddings,
-        "q_sliding_window": q_sliding_window,
-        "q_distinct_sketch": q_distinct_sketch,
-        "q_hll_distinct": q_hll_distinct,
-        "q_dedup_clusters": q_dedup_clusters,
-        "q_label_prop": q_label_prop,
-        "q_modularity": q_modularity,
-        "q_event_funnel": q_event_funnel,
-        "q_retention": q_retention,
-        "q_unigram_lm": q_unigram_lm,
-        "q_dedup_containment": q_dedup_containment,
-        "q_pivot": q_pivot,
-        "q_histogram": q_histogram,
-        "q_distinct_aggs": q_distinct_aggs,
-        "q_media_features": q_media_features,
-        "q_media_phash_dedup": q_media_phash_dedup,
-        "q_scd2": q_scd2,
-        "q_cdc_diff": q_cdc_diff,
-        "q_corr_stats": q_corr_stats,
-        "q_anomaly_zscore": q_anomaly_zscore,
-        "q_decontaminate": q_decontaminate,
-        "q_dsir_weights": q_dsir_weights,
-        "q_minhash_estimate": q_minhash_estimate,
-        "q_region_revenue": q_region_revenue,
-        "q_activity_streaks": q_activity_streaks,
-        "q_cast_deadletter": q_cast_deadletter,
-        "q_trailing_window": q_trailing_window,
-        "q_event_paths": q_event_paths,
-        "q_countmin_topk": q_countmin_topk,
-        "q_string_battery": q_string_battery,
-        "q_date_battery": q_date_battery,
-        "q_array_battery": q_array_battery,
-        "q_json_extract": q_json_extract,
-        "q_window_dedup": q_window_dedup,
-        "q_dedup_keep_best": q_dedup_keep_best,
-        "q_dedup_incremental": q_dedup_incremental,
-        "q_bpe_pair_merge": q_bpe_pair_merge,
-        "q_pagerank_neardup": q_pagerank_neardup,
-        "q_kcore": q_kcore,
-        "q_lsh_recall": q_lsh_recall,
-        "q_lsh_s_curve": q_lsh_s_curve,
-        "q_split_leakage": q_split_leakage,
-        "q_cluster_balance": q_cluster_balance,
-        "q_ngram_novelty": q_ngram_novelty,
-        "q_retention_cohorts": q_retention_cohorts,
-        "q_join_cardinality": q_join_cardinality,
-        "q_xcorr_lag": q_xcorr_lag,
-        "q_ab_ztest": q_ab_ztest,
-        "q_mixture_waterfill": q_mixture_waterfill,
-        "q_quality_calibration": q_quality_calibration,
-        "q_knn_eval": q_knn_eval,
-        "q_rank_fusion": q_rank_fusion,
-        "q_trend_robust": q_trend_robust,
-        "q_changepoint": q_changepoint,
-        "q_seasonal_decompose": q_seasonal_decompose,
-        "q_kaplan_meier": q_kaplan_meier,
-        "q_norm_profile": q_norm_profile,
-        "q_mahalanobis": q_mahalanobis,
-        "q_cohort_ltv": q_cohort_ltv,
-        "q_stl_anomaly": q_stl_anomaly,
-        "q_target_encoding": q_target_encoding,
-        "q_revenue_gini": q_revenue_gini,
-        "q_conversion_lag": q_conversion_lag,
-        "q_wap_publish": q_wap_publish,
-        "q_scd2_lookup": q_scd2_lookup,
-        "q_salted_distinct": q_salted_distinct,
-        "q_merge_schema": q_merge_schema,
-        "q_bfs_depth": q_bfs_depth,
-        "q_dp_counts": q_dp_counts,
-        "q_pq_encode": q_pq_encode,
-        "q_pq_adc_topk": q_pq_adc_topk,
-        "q_pq_recall": q_pq_recall,
-        "q_ivfpq_topk": q_ivfpq_topk,
-        "q_markov_transitions": q_markov_transitions,
-        "q_entropy_rate": q_entropy_rate,
-        "q_markov_stationary": q_markov_stationary,
-        "q_did": q_did,
-        "q_snaive_backtest": q_snaive_backtest,
-        "q_ab_srm": q_ab_srm,
-        "q_dau_mau": q_dau_mau,
-        "q_max_drawdown": q_max_drawdown,
-        "q_burstiness": q_burstiness,
-        "q_item_cooccurrence": q_item_cooccurrence,
-        "q_attribution": q_attribution,
-        "q_shard_assign": q_shard_assign,
-        "q_interleave_sources": q_interleave_sources,
-        "q_ann_recall": q_ann_recall,
-        "q_ndcg": q_ndcg,
-        "q_matryoshka_recall": q_matryoshka_recall,
-        "q_pii_redact": q_pii_redact,
-        "q_bigram_lm": q_bigram_lm,
-        "q_quantile_buckets": q_quantile_buckets,
-        "q_calendar_fill": q_calendar_fill,
-        "q_pair_degree": q_pair_degree,
-        "q_cooccurrence_lift": q_cooccurrence_lift,
-        "q_late_data_audit": q_late_data_audit,
-        "q_vocab_coverage": q_vocab_coverage,
-        "q_stream_ingest": q_stream_ingest,
-        "q_frame_sample": q_frame_sample,
-        "q_media_resize": q_media_resize,
-        "q_pandas_norm": q_pandas_norm,
-        "q_pandas_scale": q_pandas_scale,
-        "q_pandas_agg": q_pandas_agg,
-        "q_bucketed_join": q_bucketed_join,
-        "q_outer_join": q_outer_join,
-        "q_window_analytics": q_window_analytics,
-        "q_minmax_by": q_minmax_by,
-        "q_csv_source": q_csv_source,
-        "q_jsonl_source": q_jsonl_source,
-        "q_triangle_count": q_triangle_count,
-        "q_key_skew": q_key_skew,
-        "q_map_battery": q_map_battery,
-        "q_higher_order": q_higher_order,
-        "q_distinct_shards": q_distinct_shards,
-        "q_shard_filter": q_shard_filter,
-        "q_rebalance_plan": q_rebalance_plan,
-        "q_page_offset": q_page_offset,
-        "q_incremental_union": q_incremental_union,
-        "q_cast_projection": q_cast_projection,
-        "q_highwater_increment": q_highwater_increment,
-        "q_upsert_merge": q_upsert_merge,
-        "q_overwrite_partition": q_overwrite_partition,
-        "q_partitioned_layout": q_partitioned_layout,
-        "q_shard_fanout_topn": q_shard_fanout_topn,
-        "q_session_window": q_session_window,
-        "q_join_enrich": q_join_enrich,
-        "q_salted_join": q_salted_join,
-        "q_rollup": q_rollup,
-        "q_mix_shift": q_mix_shift,
-        "q_bootstrap_ci": q_bootstrap_ci,
-        "q_rfm_segments": q_rfm_segments,
-        "q_cube": q_cube,
-        "q_compaction_plan": q_compaction_plan,
-        "q_window_battery": q_window_battery,
-        "q_scalar_battery": q_scalar_battery,
-        "q_lineitem_pricing": q_lineitem_pricing,
-        "q_shipping_priority": q_shipping_priority,
-        "q_running_total": q_running_total,
-        "q_global_topk": q_global_topk,
-        "q_set_ops": q_set_ops,
-        "q_dataset_card": q_dataset_card,
-        "q_tumbling_window": q_tumbling_window,
-        "q_dedup_exact": q_dedup_exact,
-        "q_dedup_corpus": q_dedup_corpus,
-        "q_part_type_revenue": q_part_type_revenue,
-        "q_token_count": q_token_count,
-        "q_text_stats": q_text_stats,
-        "q_token_classes": q_token_classes,
-        "q_lang_id": q_lang_id,
-        "q_quality_score": q_quality_score,
-        "q_doc_fingerprint": q_doc_fingerprint,
-        "q_dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "q_dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "q_dedup_simhash": q_dedup_simhash,
-        "q_dedup_simhash_pairs": q_dedup_simhash_pairs,
-        "q_topk_cosine": q_topk_cosine,
-        "q_neardup_embedding": q_neardup_embedding,
-        "q_similarity_lsh": q_similarity_lsh,
-        "q_similarity_ivf": q_similarity_ivf,
-        "q_asof_join": q_asof_join,
-        "q_interval_join": q_interval_join,
-        "q_vocab_topk": q_vocab_topk,
-        "q_zipf_fit": q_zipf_fit,
-        "q_lang_entropy": q_lang_entropy,
-        "q_percentiles": q_percentiles,
-        "q_label_centroids": q_label_centroids,
-        "q_grouping_sets": q_grouping_sets,
-        "q_corpus_curation": q_corpus_curation,
-        "q_hash_split": q_hash_split,
-        "q_hash_sample": q_hash_sample,
-        "q_epoch_order": q_epoch_order,
-        "q_sentiment": q_sentiment,
-        "q_unpivot": q_unpivot,
-        "q_median_mad": q_median_mad,
-        "q_group_concat": q_group_concat,
-        "q_column_profile": q_column_profile,
-        "q_skyline": q_skyline,
-        "q_locf": q_locf,
-        "q_bloom_join": q_bloom_join,
-        "q_knn_classify": q_knn_classify,
-        "q_kmeans": q_kmeans,
-        "q_silhouette": q_silhouette,
-        "q_coreset": q_coreset,
-        "q_centroid_drift": q_centroid_drift,
-        "q_pca_power": q_pca_power,
-        "q_pca_variance": q_pca_variance,
-        "q_hard_negatives": q_hard_negatives,
-        "q_user_set_ops": q_user_set_ops,
-        "q_dup_substring": q_dup_substring,
-        "q_source_overlap": q_source_overlap,
-        "q_stream_window": q_stream_window,
-        "q_stream_topk": q_stream_topk,
-        "q_bpe_train": q_bpe_train,
-        "q_bpe_apply": q_bpe_apply,
-        "q_bpe_fertility": q_bpe_fertility,
-        "q_semdedup": q_semdedup,
-        "q_cogroup": q_cogroup,
-        "q_null_battery": q_null_battery,
-        "q_log2_histogram": q_log2_histogram,
-        "q_threshold_curve": q_threshold_curve,
-        "q_hapax_docs": q_hapax_docs,
-        "q_dist_drift": q_dist_drift,
-        "q_benford": q_benford,
-        "q_dow_profile": q_dow_profile,
-        "q_weighted_jaccard": q_weighted_jaccard,
-        "q_clustering_coef": q_clustering_coef,
-        "q_ema": q_ema,
-        "q_cusum": q_cusum,
-        "q_autocorr": q_autocorr,
-        "q_sax_motifs": q_sax_motifs,
-        "q_audio_chunks": q_audio_chunks,
-        "q_partial_merge": q_partial_merge,
-        "q_weighted_sample": q_weighted_sample,
-        "q_winsorize": q_winsorize,
-        "q_cluster_terms": q_cluster_terms,
-        "q_sql_frontend": q_sql_frontend,
-        "q_fuzzy_join": q_fuzzy_join,
-        "q_sketch_merge": q_sketch_merge,
-        "q_sketch_intersect": q_sketch_intersect,
-        "q_orc_source": q_orc_source,
-        "q_tpch_q2": q_tpch_q2,
-        "q_tpch_q4": q_tpch_q4,
-        "q_tpch_q6": q_tpch_q6,
-        "q_tpch_q7": q_tpch_q7,
-        "q_tpch_q8": q_tpch_q8,
-        "q_tpch_q9": q_tpch_q9,
-        "q_tpch_q10": q_tpch_q10,
-        "q_tpch_q11": q_tpch_q11,
-        "q_tpch_q12": q_tpch_q12,
-        "q_tpch_q13": q_tpch_q13,
-        "q_tpch_q14": q_tpch_q14,
-        "q_tpch_q15": q_tpch_q15,
-        "q_tpch_q16": q_tpch_q16,
-        "q_tpch_q17": q_tpch_q17,
-        "q_tpch_q18": q_tpch_q18,
-        "q_tpch_q19": q_tpch_q19,
-        "q_tpch_q20": q_tpch_q20,
-        "q_tpch_q21": q_tpch_q21,
-        "q_tpch_q22": q_tpch_q22,
-        "q_zorder_layout": q_zorder_layout,
-        "q_hilbert_layout": q_hilbert_layout,
-        "q_partition_evolution": q_partition_evolution,
-        "q_encoding_audit": q_encoding_audit,
-        "q_clustering_depth": q_clustering_depth,
-        "q_zonemap_prune": q_zonemap_prune,
-        "q_merge_delete": q_merge_delete,
-        "q_stream_join": q_stream_join,
-        "q_stream_outer_join": q_stream_outer_join,
-        "q_time_travel": q_time_travel,
-        "q_snapshot_diff": q_snapshot_diff,
-        "q_python_source": q_python_source,
-        "q_python_stream_source": q_python_stream_source,
-        "q_variant": q_variant,
-        "q_stream_session": q_stream_session,
-        "q_udtf_runs": q_udtf_runs,
-        "q_hist_quantiles": q_hist_quantiles,
-        "q_dq_checks": q_dq_checks,
-        "q_ks_test": q_ks_test,
-        "q_mann_whitney": q_mann_whitney,
-        "q_psi_drift": q_psi_drift,
-        "q_l_diversity": q_l_diversity,
-        "q_assortativity": q_assortativity,
-        "q_heaps_fit": q_heaps_fit,
-        "q_quantile_normalize": q_quantile_normalize,
-        "q_filter_funnel": q_filter_funnel,
-        "q_referential_audit": q_referential_audit,
-        "q_k_anonymity": q_k_anonymity,
-        "q_stream_static": q_stream_static,
-        "q_cep_patterns": q_cep_patterns,
-        "q_nearest_join": q_nearest_join,
-        "q_sliding_distinct": q_sliding_distinct,
-        "q_mode_per_key": q_mode_per_key,
-        "q_stream_dedup": q_stream_dedup,
-        "q_stateful_offsets": q_stateful_offsets,
-        "q_stream_cdc": q_stream_cdc,
-        "q_stream_lsh_dedup": q_stream_lsh_dedup,
-        "q_stream_moments": q_stream_moments,
-        "q_stream_kmv": q_stream_kmv,
-    }
-    missing = [n for n in _ROUND13_WINDOW if n not in q]
-    if missing:  # a renamed/dropped query must fail loudly, not shrink the window
-        raise KeyError(f"_ROUND13_WINDOW names not in queries(): {missing}")
-    return {**{k: q[k] for k in _ROUND13_WINDOW}, **q}
-
-
-#: Queries whose implementation changed in round 11 — re-verified by the
-#: driver the same round they changed (standing rule, VERDICT r8 item #2).
-#: Round 11 sized q_stream_static's complete-mode agg state stores
-#: (VERDICT r10 item #1 — plan shape only, values unchanged),
-#: sample-trained the √N k-means cells behind q_semdedup /
-#: q_hard_negatives with distinct-code seeding AND moved their pair
-#: audit onto the per-cell blocked-BLAS applyInPandas kernel (VERDICT
-#: r10 item #2 — oracles now carry the sampled training CTEs; the
-#: kernel keeps the exact rounding in Spark so values match), and moved
-#: winsorize's rank k onto exact decimal arithmetic (ADVICE r10 — same
-#: values at every reachable group size).
-_ROUND11_CHANGED = [
-    "q_stream_static", "q_semdedup", "q_hard_negatives", "q_winsorize",
-]
-
-#: Queries whose implementation changed in round 12 — re-verified by the
-#: driver the same round they changed (standing rule, VERDICT r8 item
-#: #2). Round 12 (a) moved the semdedup pair kernel's width guard ahead
-#: of its n<2 early return and derived the oracle training-budget
-#: expression from shared constants (both ADVICE r11 — value-neutral by
-#: construction, re-verified anyway because the kernel byte-code
-#: changed), and (b) SAMPLE-TRAINED the PQ codebooks (the r11
-#: semdedup-cells pattern applied to PQ, with ADC tables re-keyed by
-#: code id for the non-contiguous sampled seeds) — oracle VALUES change
-#: for the whole PQ family, whose four queries re-verify this round.
-#: The optimization pass then added (values identical, plans changed —
-#: OPTIMIZATION_r12.md carries the before/after evidence):
-#: five runtime drains now size their state stores to the staged source
-#: (q_stream_cdc/_lsh_dedup/_moments/_kmv + q_stateful_offsets, the
-#: q_stream_static fix generalized); six operators whose
-#: persist()/pre-action-unpersist() pair cached nothing now
-#: localCheckpoint their shared intermediate (q_item_cooccurrence,
-#: q_dau_mau, q_pmi_collocations, q_rake_keyphrases, q_sketch_intersect,
-#: q_assortativity); q_dedup_incremental carries the side tag through
-#: the shingle scan instead of re-joining it; q_split_leakage evaluates
-#: the hash-split label as an expression instead of joining it onto the
-#: exploded gram relation; q_knn_eval / q_ann_recall checkpoint their
-#: budget-bounded scored relation so the metric rollups stop re-running
-#: the brute-force pass.
-_ROUND12_CHANGED = [
-    "q_semdedup", "q_hard_negatives",
-    "q_pq_encode", "q_pq_adc_topk", "q_pq_recall", "q_ivfpq_topk",
-    "q_stream_cdc", "q_stream_lsh_dedup", "q_stream_moments",
-    "q_stream_kmv", "q_stateful_offsets",
-    "q_item_cooccurrence", "q_dau_mau", "q_pmi_collocations",
-    "q_rake_keyphrases", "q_sketch_intersect", "q_assortativity",
-    "q_dedup_incremental", "q_split_leakage",
-    "q_knn_eval", "q_ann_recall",
-]
-
-#: Queries whose implementation changed in round 13 (optimization round
-#: 2 of 2) — re-verified by the driver the same round they changed
-#: (standing rule, VERDICT r8 item #2). All value-identical by
-#: construction; oracle SQL untouched this round (VERDICT r12 item #9):
-#: q_ndcg broadcasts the k·|probes|-row exact side of its final join
+#: Queries whose implementation changed since the driver last checked
+#: them. They lead DRIVER_WINDOW so the driver re-verifies a change the
+#: round it lands (VERDICT r8 item #2). The current set is all
+#: value-identical by construction (oracle SQL untouched): q_ndcg
+#: broadcasts the k·|probes|-row exact side of its final join
 #: (2 SortMergeJoins → 0); q_media_resize's mapInPandas kernel is
 #: columnar instead of a Series-per-row pdf.apply (75× less Python per
 #: batch, bytes identical); q_stream_join / q_stream_dedup skip the
@@ -4773,7 +4406,7 @@ _ROUND12_CHANGED = [
 #: because their Arrow kernels' bytecode changed (worker-side BLAS cap,
 #: ADVICE r12 — a no-op wherever the env pin already reached the
 #: worker).
-_ROUND13_CHANGED = [
+DRIVER_WINDOW_CHANGED = [
     "q_ndcg", "q_media_resize", "q_stream_join", "q_stream_dedup",
     "q_tpch_q20", "q_item_cooccurrence",
     "q_semdedup", "q_hard_negatives", "q_pq_encode", "q_pq_adc_topk",
@@ -4781,22 +4414,24 @@ _ROUND13_CHANGED = [
 ]
 
 #: Names bench.py must keep in its stdout line even when trimming to the
-#: driver's 2000-char capture window — the round's changed queries plus
-#: the watch list (VERDICT r12 item #2: q_stream_moments /
-#: q_stream_lsh_dedup must show their post-sizing band on a driver row;
-#: q_ndcg is changed this round and covered there), so every watched
-#: query gets a driver row even if it falls under the slowest-N cutoff.
-BENCH_ALWAYS_REPORT = tuple(_ROUND13_CHANGED) + (
+#: driver's 2000-char capture window — the changed queries plus the
+#: watch list (VERDICT r12 item #2: q_stream_moments /
+#: q_stream_lsh_dedup must show their post-sizing band on a driver row),
+#: so every watched query gets a driver row even if it falls under the
+#: slowest-N cutoff.
+BENCH_ALWAYS_REPORT = tuple(DRIVER_WINDOW_CHANGED) + (
     "q_stream_moments", "q_stream_lsh_dedup", "q_winsorize",
     "q_stream_session", "q_python_source", "q_python_stream_source",
 )
 
-# The round-13 driver-correctness window: changed queries first, then
-# the STALEST (the remaining 4-name round-4 vintage, then round-5
-# vintage in name order), filling to 50. Machine-derived from
-# CORRECTNESS_r*.json (rounds 1-12) and re-derived by the pin test
-# tests/test_shared_state.py::test_round13_window_stalest_machine_checked.
-_ROUND13_WINDOW = _ROUND13_CHANGED + [
+# The driver-correctness window. The external correctness runner emits
+# rows for only the FIRST 50 entries of queries(), so this list leads
+# it: the changed queries, then the STALEST by (latest driver
+# CORRECTNESS round, name), filling to 50. Every query is oracle-checked
+# locally regardless (tests/test_oracle_parity.py). Machine-derived from
+# the CORRECTNESS_r*.json artifacts and re-derived by
+# tests/test_shared_state.py::test_driver_window_stalest_machine_checked.
+DRIVER_WINDOW = DRIVER_WINDOW_CHANGED + [
     "q_tpch_q9", "q_udtf_runs", "q_variant", "q_zorder_layout",
     "q_autocorr", "q_benford", "q_bloom_join", "q_bm25_topk",
     "q_bpe_apply", "q_bpe_train", "q_calendar_fill", "q_clustering_coef",
@@ -4809,303 +4444,23 @@ _ROUND13_WINDOW = _ROUND13_CHANGED + [
     "q_triangle_count", "q_unpivot",
 ]
 
-# The round-12 driver-correctness window: changed queries first, then
-# the STALEST (the full 34-name round-4 vintage, then round-5 vintage in
-# name order), filling to 50. Machine-derived from CORRECTNESS_r*.json
-# (rounds 1-11) and re-derived by the pin test
-# tests/test_shared_state.py::test_round12_window_stalest_machine_checked.
-# (Historical as of round 13 — queries() now fronts _ROUND13_WINDOW;
-# kept for the r12 pin test.)
-_ROUND12_WINDOW = _ROUND12_CHANGED + [
-    "q_pandas_norm", "q_pandas_scale", "q_python_source", "q_sliding_distinct",
-    "q_sql_frontend", "q_stream_dedup", "q_stream_ingest", "q_stream_join",
-    "q_stream_session", "q_stream_window", "q_time_travel", "q_tpch_q10",
-    "q_tpch_q11", "q_tpch_q12", "q_tpch_q13", "q_tpch_q14",
-    "q_tpch_q15", "q_tpch_q16", "q_tpch_q17", "q_tpch_q18",
-    "q_tpch_q19", "q_tpch_q2", "q_tpch_q20", "q_tpch_q21",
-    "q_tpch_q22", "q_tpch_q4", "q_tpch_q6", "q_tpch_q7",
-    "q_tpch_q8",
-]
 
-# The round-11 driver-correctness window: the round's changed queries
-# first, then the STALEST queries — those whose latest driver
-# CORRECTNESS row is oldest (the full 32-name round-3 vintage, then
-# round-4 vintage in name order), filling to 50. Machine-derived from
-# the CORRECTNESS_r*.json artifacts and re-derived by the pin test
-# tests/test_shared_state.py::test_round11_window_stalest_machine_checked.
-# (Historical as of round 12 — queries() now fronts _ROUND12_WINDOW;
-# kept for the r11 pin test.)
-_ROUND11_WINDOW = _ROUND11_CHANGED + [
-    "q_cast_deadletter", "q_cdc_diff", "q_chunk_documents", "q_corr_stats",
-    "q_countmin_topk", "q_date_battery", "q_distinct_aggs", "q_distinct_sketch",
-    "q_event_funnel", "q_event_paths", "q_histogram", "q_interleave_sources",
-    "q_json_extract", "q_media_features", "q_normalize_text", "q_order_coverage",
-    "q_pii_redact", "q_pivot", "q_quantize_embeddings", "q_region_revenue",
-    "q_retention", "q_scd2", "q_shard_assign", "q_sliding_window",
-    "q_stratified_sample", "q_string_battery", "q_temperature_sample", "q_tfidf_topk",
-    "q_trailing_window", "q_ts_similarity", "q_unigram_lm", "q_window_dedup",
-    "q_audio_chunks", "q_bucketed_join", "q_cep_patterns", "q_cogroup",
-    "q_csv_source", "q_dq_checks", "q_frame_sample", "q_jsonl_source",
-    "q_media_resize", "q_merge_delete", "q_mode_per_key", "q_nearest_join",
-    "q_orc_source", "q_pandas_agg",
-]
-
-
-#: Queries whose implementation changed in round 10 — re-verified by the
-#: driver the same round they changed (standing rule, VERDICT r8 item #2).
-#: Round 10 rewrote median_mad's common path (3-job composite-key
-#: histogram selection replacing the 5-job radix chain), moved
-#: winsorize_prices onto relational.fused_kth_by_group (4 jobs → 3), and
-#: replaced fuzzy_name_pairs' quadratic nation-block candidates with the
-#: FastSS deletion-neighborhood join (same output pair set).
-_ROUND10_CHANGED = ["q_median_mad", "q_winsorize", "q_fuzzy_join"]
-
-# The round-10 driver-correctness window: the round's changed queries
-# first, then the STALEST queries — those whose latest driver
-# CORRECTNESS row is oldest (41 names last driver-checked in round 2,
-# then round-3 vintage in name order), filling to 50. The stalest
-# portion is MACHINE-DERIVED from the CORRECTNESS_r0*.json artifacts
-# and re-derived by the pin test
-# tests/test_shared_state.py::test_round10_window_stalest_machine_checked
-# (ADVICE round 9, medium: window membership must be verified against
-# artifacts, not vibes). (Historical as of round 11 — queries() now
-# fronts _ROUND11_WINDOW; kept for the r10 pin test.)
-_ROUND10_WINDOW = _ROUND10_CHANGED + [
-    "q_asof_join", "q_cast_projection", "q_corpus_curation",
-    "q_cube", "q_dedup_exact", "q_dedup_simhash", "q_dedup_simhash_pairs",
-    "q_distinct_shards", "q_global_topk", "q_grouping_sets", "q_hash_sample",
-    "q_hash_split", "q_highwater_increment", "q_incremental_union", "q_interval_join",
-    "q_join_enrich", "q_label_centroids", "q_lang_id", "q_lineitem_pricing",
-    "q_overwrite_partition", "q_page_offset", "q_part_type_revenue", "q_partitioned_layout",
-    "q_quality_score", "q_rollup", "q_running_total", "q_salted_join",
-    "q_scalar_battery", "q_sentiment", "q_session_window", "q_set_ops",
-    "q_shard_fanout_topn", "q_shard_filter", "q_shipping_priority", "q_text_stats",
-    "q_token_classes", "q_token_count", "q_tumbling_window", "q_upsert_merge",
-    "q_vocab_topk", "q_window_battery", "q_activity_streaks", "q_array_battery",
-    "q_avro_contract", "q_bigram_lm", "q_bigram_topk", "q_bpe_pair_merge",
-]
-
-
-# The round-9 driver-correctness window (historical as of round 10 —
-# queries() now fronts _ROUND10_WINDOW; kept for the r9 pin test): every
-# query whose implementation or ORACLE text changed in round 9, in
-# change order. The round touched enough shared fragments that the
-# changed set filled all 50 slots; the stalest rotation resumed in
-# round 10.
-_ROUND9_WINDOW = [
-    # changed this round — re-verify in the same round they changed.
-    # Round 9 touched enough oracles (radix rewrites, degenerate-input
-    # NULL guards, NULL-safe cosine + Lloyd keep-previous, the clamped
-    # duck_shingles fragment shared by the whole shingle family) that
-    # the changed set fills the entire 50-slot window; the stalest
-    # rotation resumes next round. Ordered by change risk: impl+oracle
-    # rewrites first, oracle-fragment-only changes last.
-    "q_knn_eval", "q_median_mad", "q_semdedup", "q_hard_negatives",
-    "q_percentiles", "q_quantile_normalize", "q_quantile_buckets",
-    "q_hist_quantiles", "q_neyman_allocation", "q_anomaly_zscore",
-    "q_did", "q_burstiness",
-    "q_topk_cosine", "q_neardup_embedding", "q_similarity_lsh",
-    "q_similarity_ivf", "q_knn_classify", "q_ann_recall", "q_ndcg",
-    "q_rank_fusion", "q_matryoshka_recall", "q_pq_encode",
-    "q_pq_adc_topk", "q_pq_recall", "q_ivfpq_topk", "q_kmeans",
-    "q_silhouette", "q_cluster_balance", "q_cluster_terms",
-    "q_centroid_drift", "q_pagerank_neardup",
-    "q_pmi_collocations", "q_filter_funnel", "q_weighted_sample",
-    "q_repetition", "q_doc_fingerprint", "q_dup_substring",
-    "q_ngram_novelty", "q_decontaminate", "q_dedup_ngram_jaccard",
-    "q_dedup_minhash_lsh", "q_dedup_corpus", "q_dedup_containment",
-    "q_dedup_incremental", "q_dedup_keep_best", "q_dedup_clusters",
-    "q_minhash_estimate", "q_lsh_recall", "q_pair_degree",
-    "q_ab_ztest",
-]
-
-
-# The round-8 driver-correctness window: EXACTLY the 50 queries that have
-# never had a driver CORRECTNESS row in rounds 1–7 (computed from the
-# union of CORRECTNESS_r01..r07 names vs the 298-query registry, and
-# matching VERDICT.md round-7 item #1 name-for-name). All 50 are locally
-# oracle-green (tests/test_oracle_parity.py); this rotation closes the
-# t2 contract at 298/298 driver-confirmed. (Historical as of round 9 —
-# queries() now fronts _ROUND9_WINDOW; kept for the r8 pin test.)
-_ROUND8_WINDOW = [
-    # text analysis / corpus stats (6)
-    "q_pmi_collocations", "q_rake_keyphrases", "q_source_kl",
-    "q_langid_confusion", "q_lix_readability", "q_quality_calibration",
-    # sampling / batching / governance (6)
-    "q_token_budget_shards", "q_neyman_allocation", "q_mixture_waterfill",
-    "q_rebalance_plan", "q_k_anonymity", "q_l_diversity",
-    # graph (2)
-    "q_modularity", "q_assortativity",
-    # multimodal (1)
-    "q_media_phash_dedup",
-    # similarity / ANN / PQ family (8)
-    "q_lsh_s_curve", "q_knn_eval", "q_ndcg", "q_rank_fusion",
-    "q_pq_encode", "q_pq_adc_topk", "q_pq_recall", "q_ivfpq_topk",
-    # PCA (1)
-    "q_pca_variance",
-    # event analytics / time series / experimentation (14)
-    "q_xcorr_lag", "q_ab_ztest", "q_ab_srm", "q_did", "q_dau_mau",
-    "q_markov_transitions", "q_markov_stationary", "q_entropy_rate",
-    "q_max_drawdown", "q_burstiness", "q_snaive_backtest",
-    "q_trend_robust", "q_item_cooccurrence", "q_rfm_segments",
-    # statistics / sketches / drift (5)
-    "q_mann_whitney", "q_psi_drift", "q_sketch_intersect",
-    "q_join_cardinality", "q_bootstrap_ci",
-    # storage layout / maintenance (4)
-    "q_partition_evolution", "q_encoding_audit", "q_clustering_depth",
-    "q_snapshot_diff",
-    # streaming runtime (3)
-    "q_stream_lsh_dedup", "q_stream_moments", "q_stream_kmv",
-]
-
-
-# The round-6 driver-correctness window: every query that has NEVER had a
-# driver CORRECTNESS row (q_ema/q_locf close the r5 contract; the rest are
-# round-6 additions), ordered contract-first; the tail re-verifies the
-# paths round 6 touched (two-phase ranks, shared k-means, sink ledger,
-# connector hardening) if the driver's window reaches them.
-_ROUND6_WINDOW = [
-    "q_ema",
-    "q_locf",
-    "q_pack_bins",
-    "q_late_data_audit",
-    "q_coreset",
-    "q_hilbert_layout",
-    "q_dsir_weights",
-    "q_sax_motifs",
-    "q_label_prop",
-    "q_mix_shift",
-    "q_changepoint",
-    "q_filter_funnel",
-    "q_referential_audit",
-    "q_matryoshka_recall",
-    "q_zipf_fit",
-    "q_lang_entropy",
-    "q_hll_distinct",
-    "q_attribution",
-    "q_stream_topk",
-    "q_seasonal_decompose",
-    "q_centroid_drift",
-    "q_ks_test",
-    "q_heaps_fit",
-    "q_quantile_normalize",
-    "q_kaplan_meier",
-    "q_norm_profile",
-    "q_mahalanobis",
-    "q_cohort_ltv",
-    "q_stl_anomaly",
-    "q_target_encoding",
-    "q_salted_distinct",
-    "q_merge_schema",
-    "q_bfs_depth",
-    "q_dp_counts",
-    "q_revenue_gini",
-    "q_conversion_lag",
-    "q_wap_publish",
-    "q_scd2_lookup",
-    "q_silhouette",
-    "q_keyness",
-    "q_zonemap_prune",
-    "q_epoch_order",
-    "q_stream_cdc",
-    "q_kcore",
-    "q_bpe_fertility",
-    "q_lsh_recall",
-    "q_split_leakage",
-    "q_cluster_balance",
-    "q_ngram_novelty",
-    "q_retention_cohorts",
-    "q_snapshot_diff",
-    "q_join_cardinality",
-    "q_xcorr_lag",
-    "q_ab_ztest",
-    "q_mixture_waterfill",
-    "q_quality_calibration",
-    "q_knn_eval",
-    "q_rank_fusion",
-    "q_trend_robust",
-    "q_pq_encode",
-    "q_pq_adc_topk",
-    "q_pq_recall",
-    "q_ivfpq_topk",
-    "q_markov_transitions",
-    "q_k_anonymity",
-    "q_token_budget_shards",
-    "q_ts_similarity",
-    "q_zorder_layout",
-    "q_kmeans",
-    "q_semdedup",
-    "q_hard_negatives",
-    "q_cluster_terms",
-    "q_time_travel",
-    "q_merge_delete",
-    "q_stream_ingest",
-    "q_python_source",
-    "q_python_stream_source",
-    "q_stateful_offsets",
-]
-
-
-# The 50-slot driver-correctness window for round 5: every name here has
-# never been driver-checked (absent from CORRECTNESS_r01..r04) — the
-# final 52 minus the 2 deferred to round 6 (q_locf, q_ema). Dict
-# unpacking keeps these first.
-_ROUND5_WINDOW = [
-    # retrieval / clustering / embedding analytics (9)
-    "q_bm25_topk", "q_kmeans", "q_semdedup", "q_hard_negatives",
-    "q_pca_power", "q_knn_classify", "q_cluster_terms",
-    "q_weighted_jaccard", "q_source_overlap",
-    # streaming / connector newcomers (2)
-    "q_stream_outer_join", "q_python_stream_source",
-    # storage / layout (2)
-    "q_compaction_plan", "q_dataset_card",
-    # graph (3)
-    "q_triangle_count", "q_clustering_coef", "q_pair_degree",
-    # tokenizer training (3)
-    "q_bpe_train", "q_bpe_apply", "q_dup_substring",
-    # corpus statistics / drift (10)
-    "q_vocab_coverage", "q_hapax_docs", "q_dist_drift", "q_benford",
-    "q_log2_histogram", "q_threshold_curve", "q_column_profile",
-    "q_median_mad", "q_cooccurrence_lift", "q_dow_profile",
-    # time series (5)
-    "q_cusum", "q_autocorr", "q_calendar_fill", "q_late_data_audit",
-    "q_winsorize",
-    # relational / window shapes (11)
-    "q_outer_join", "q_window_analytics", "q_minmax_by", "q_key_skew",
-    "q_map_battery", "q_higher_order", "q_unpivot", "q_group_concat",
-    "q_skyline", "q_null_battery", "q_user_set_ops",
-    # joins / sampling / sketches (5)
-    "q_bloom_join", "q_fuzzy_join", "q_weighted_sample",
-    "q_partial_merge", "q_sketch_merge",
-]
-
-# Round 4's window, kept for the audit trail (all 50 driver-green in
-# CORRECTNESS_r04.json).
-_ROUND4_WINDOW = [
-    # TPC-H relational battery (19)
-    "q_tpch_q2", "q_tpch_q4", "q_tpch_q6", "q_tpch_q7", "q_tpch_q8",
-    "q_tpch_q9", "q_tpch_q10", "q_tpch_q11", "q_tpch_q12", "q_tpch_q13",
-    "q_tpch_q14", "q_tpch_q15", "q_tpch_q16", "q_tpch_q17", "q_tpch_q18",
-    "q_tpch_q19", "q_tpch_q20", "q_tpch_q21", "q_tpch_q22",
-    # storage / snapshots / merge (3)
-    "q_zorder_layout", "q_merge_delete", "q_time_travel",
-    # streaming runtime (7)
-    "q_stream_ingest", "q_stream_window", "q_stream_join",
-    "q_stream_session", "q_stream_static", "q_stream_dedup",
-    "q_stateful_offsets",
-    # source connectors (4)
-    "q_csv_source", "q_jsonl_source", "q_orc_source", "q_python_source",
-    # feature queries (9)
-    "q_variant", "q_udtf_runs", "q_hist_quantiles", "q_dq_checks",
-    "q_cep_patterns", "q_nearest_join", "q_sliding_distinct",
-    "q_mode_per_key", "q_sql_frontend",
-    # multimodal (3)
-    "q_frame_sample", "q_media_resize", "q_audio_chunks",
-    # pandas-UDF surface (3)
-    "q_pandas_norm", "q_pandas_scale", "q_pandas_agg",
-    # layout + cogroup (2)
-    "q_bucketed_join", "q_cogroup",
-]
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every top-level ``q_*`` function defined in this module, keyed by
+    name, with DRIVER_WINDOW first and the rest in definition order.
+    Adding a query means defining it (and its oracle); there is no list
+    to keep."""
+    q = {
+        name: fn
+        for name, fn in globals().items()
+        if name.startswith("q_")
+        and inspect.isfunction(fn)
+        and fn.__module__ == __name__
+    }
+    missing = [n for n in DRIVER_WINDOW if n not in q]
+    if missing:  # a renamed/dropped query must fail loudly, not shrink the window
+        raise KeyError(f"DRIVER_WINDOW names not in queries(): {missing}")
+    return {**{k: q[k] for k in DRIVER_WINDOW}, **q}
 
 
 def shared_legs() -> dict[str, Callable[[SparkSession, str], None]]:

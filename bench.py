@@ -114,7 +114,6 @@ def main() -> None:
     # box noise; different counts = structural.
     stream_drains: dict[str, dict] = {}
     sweep_skips = 0
-    gc_nudge = os.environ.get("SPARK_GRAFT_GC_NUDGE", "") == "1"
     import gc
 
     load_start = os.getloadavg()[0]
@@ -148,10 +147,9 @@ def main() -> None:
         # RDD blocks. Round 9 diagnosed the leak (accumulated blocks
         # degraded a cold sweep's TAIL ~4×: q_tpch_q8 3.57 s in-sweep vs
         # 0.86 s fresh) and nudged System.gc() per query; round 10
-        # replaces the nudge with DETERMINISTIC release: the shared-state
+        # replaced the nudge with DETERMINISTIC release: the shared-state
         # layer unpersists every persistent RDD it does not own as a live
-        # memoized leg (VERDICT r9 item #5). The gc nudge stays available
-        # behind SPARK_GRAFT_GC_NUDGE=1 as a fallback only.
+        # memoized leg (VERDICT r9 item #5).
         if _streaming.DRAIN_TELEMETRY:
             # the LAST attempt's drains (the dict is overwritten per
             # drain, and the best-of-N attempts run identical plans)
@@ -161,11 +159,6 @@ def main() -> None:
         gc.collect()
         if entrymod.release_transient_checkpoints(spark) == -1:
             sweep_skips += 1  # ADVICE r11: a skipped sweep must be visible
-        if gc_nudge:
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass  # py4j hiccup must never fail the bench
         times[name] = round(best, 4)
 
     per_query_total = round(sum(times.values()), 4)
@@ -182,8 +175,8 @@ def main() -> None:
     # harness_rev pairs like-for-like sweeps across rounds (ADVICE r9):
     # 1 = best-of-N, shared legs uncosted (r6-7); 2 = shared legs costed
     # once (r8); 2.1 = + per-query System.gc() nudge (r9); 3 = +
-    # deterministic transient-checkpoint release, gc nudge opt-in (r10).
-    harness_rev = 3.1 if gc_nudge else 3
+    # deterministic transient-checkpoint release instead of the nudge (r10).
+    harness_rev = 3
     payload = {
         "metric": "total_query_wall_sec",
         "value": total,
@@ -213,7 +206,6 @@ def main() -> None:
                 "no_shared_mode": no_shared,
                 "harness": {
                     "rev": harness_rev,
-                    "gc_nudge": gc_nudge,
                     "deterministic_checkpoint_release": True,
                     "checkpoint_sweep_skips": sweep_skips,
                     # box state at sweep start/end: the documented

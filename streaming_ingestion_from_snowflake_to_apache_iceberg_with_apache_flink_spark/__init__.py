@@ -46,11 +46,6 @@ import os as _os
 # executor JVMs) session.get_spark additionally sets
 # spark.executorEnv.* from the same values. setdefault: an explicit
 # user/cluster setting always wins.
-_blas_threads = _os.environ.get("SPARK_GRAFT_BLAS_THREADS", "1")
-for _var in (
-    "OPENBLAS_NUM_THREADS",
-    "OMP_NUM_THREADS",
-    "MKL_NUM_THREADS",
-    "NUMEXPR_NUM_THREADS",
-):
-    _os.environ.setdefault(_var, _blas_threads)
+from .functions.blas import pin_env as _pin_env  # noqa: E402
+
+_pin_env(_os.environ.get("SPARK_GRAFT_BLAS_THREADS", "1"))

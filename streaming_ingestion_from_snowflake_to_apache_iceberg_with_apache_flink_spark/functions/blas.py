@@ -12,7 +12,7 @@ imported, so the worker daemon never inherits the caps and OpenBLAS
 silently defaults to one thread per CPU again.  This module closes the
 hole from the worker side: every numpy kernel calls
 :func:`ensure_blas_pinned` before its first matmul, which — only when no
-thread-count env reached this process — caps the ALREADY-LOADED OpenBLAS
+thread-count env reached this process — caps every ALREADY-LOADED OpenBLAS
 at runtime through its own ``openblas_set_num_threads`` entry point
 (the same mechanism threadpoolctl uses; threadpoolctl itself is not in
 the container).  Idempotent, once per worker process, ~µs when already
@@ -27,13 +27,36 @@ from __future__ import annotations
 
 import os
 
+#: The thread-count env vars the package ``__init__`` pins (:func:`pin_env`).
+THREAD_VARS = (
+    "OPENBLAS_NUM_THREADS",
+    "OMP_NUM_THREADS",
+    "MKL_NUM_THREADS",
+    "NUMEXPR_NUM_THREADS",
+)
+
+#: The THREAD_VARS that :func:`pin_env` itself set in this process. A
+#: worker forked from a JVM that predates the pin imports the package —
+#: and so gets these defaults — only after its numpy has loaded OpenBLAS,
+#: so they must not count as a pin that reached the process.
+_DEFAULTED: frozenset = frozenset()
+
 _DONE = False
 
 
+def pin_env(threads: str) -> None:
+    """Default every THREAD_VARS entry to ``threads`` (an explicit
+    setting wins), remembering which ones this call set."""
+    global _DEFAULTED
+    _DEFAULTED = frozenset(v for v in THREAD_VARS if v not in os.environ)
+    for v in THREAD_VARS:
+        os.environ.setdefault(v, threads)
+
+
 def _runtime_cap(n: int) -> None:
-    """Cap the already-loaded numpy OpenBLAS at ``n`` threads via its C
-    API.  Best-effort: an exotic BLAS build without the symbol simply
-    keeps its env-derived default."""
+    """Cap every already-loaded numpy OpenBLAS at ``n`` threads via its C
+    API (numpy and scipy may each bundle one).  Best-effort: an exotic
+    BLAS build without the symbol simply keeps its env-derived default."""
     import ctypes
     import glob
 
@@ -54,7 +77,7 @@ def _runtime_cap(n: int) -> None:
             fn = getattr(lib, sym, None)
             if fn is not None:
                 fn(n)
-                return
+                break
 
 
 def ensure_blas_pinned() -> None:
@@ -65,7 +88,7 @@ def ensure_blas_pinned() -> None:
     if _DONE:
         return
     _DONE = True
-    if os.environ.get("OPENBLAS_NUM_THREADS"):
+    if any(os.environ.get(v) for v in THREAD_VARS if v not in _DEFAULTED):
         return  # env pin reached this process; OpenBLAS honored it at load
     try:
         _runtime_cap(int(os.environ.get("SPARK_GRAFT_BLAS_THREADS", "1")))

@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .functions.blas import THREAD_VARS
+
 
 def get_spark(
     app_name: str = "snowflake-to-iceberg-spark",
@@ -57,12 +59,7 @@ def get_spark(
     # the same values via the package-import-time env pin in __init__.py
     # — see the rationale there. Values come from that pin, so the two
     # paths can never disagree; SPARK_GRAFT_BLAS_THREADS overrides both.
-    for var in (
-        "OPENBLAS_NUM_THREADS",
-        "OMP_NUM_THREADS",
-        "MKL_NUM_THREADS",
-        "NUMEXPR_NUM_THREADS",
-    ):
+    for var in THREAD_VARS:
         if os.environ.get(var):
             b = b.config(f"spark.executorEnv.{var}", os.environ[var])
     for k, v in (extra_conf or {}).items():

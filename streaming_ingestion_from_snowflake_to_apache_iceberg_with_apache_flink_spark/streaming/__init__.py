@@ -3,6 +3,8 @@ aggregations, custom keyed state."""
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
 import re
 import shutil
@@ -43,22 +45,42 @@ def scratch_root() -> str:
     return tempfile.gettempdir()
 
 
+@functools.cache
+def _pid_space_tag() -> str:
+    """Short hash of this kernel's boot id and this process's PID
+    namespace: a scratch dir's PID names its owner only for processes
+    that share both (ADVICE r13)."""
+    try:
+        with open("/proc/sys/kernel/random/boot_id") as fh:
+            boot = fh.read().strip()
+    except OSError:
+        boot = ""
+    try:
+        pidns = os.readlink("/proc/self/ns/pid")
+    except OSError:
+        pidns = ""
+    return hashlib.sha1(f"{boot}|{pidns}".encode()).hexdigest()[:8]
+
+
 def _sweep_stale_scratch(root: str) -> None:
     """Reclaim scratch dirs leaked by a SIGKILLed owner: every dir here
-    is named ``sg<pid>_…`` by :func:`scratch_dir`, so a dir whose owner
-    PID is gone is garbage by construction (the default root is tmpfs —
-    leaked checkpoint files are RAM until reboot; ADVICE r12 / VERDICT
-    r12 item #4).  A dir whose owner is alive is never touched, so
-    concurrent sessions are safe."""
+    is named ``sg<tag>_<pid>_…`` by :func:`scratch_dir`, so a dir with
+    this process's tag whose owner PID is gone is garbage by construction
+    (the default root is tmpfs — leaked checkpoint files are RAM until
+    reboot; ADVICE r12 / VERDICT r12 item #4).  A dir whose owner is
+    alive is never touched, so concurrent sessions are safe; neither is
+    a dir made in another PID namespace or boot (another container or
+    host sharing the root), whose PID means nothing here."""
     try:
         entries = os.listdir(root)
     except OSError:
         return
+    tag = _pid_space_tag()
     for name in entries:
         m = _SCRATCH_RE.match(name)
-        if not m:
+        if not m or m.group(1) != tag:
             continue
-        pid = int(m.group(1))
+        pid = int(m.group(2))
         if pid == os.getpid():
             continue
         try:
@@ -69,19 +91,22 @@ def _sweep_stale_scratch(root: str) -> None:
             continue  # EPERM etc.: owner exists, leave it
 
 
-_SCRATCH_RE = re.compile(r"^sg(\d+)_")
+_SCRATCH_RE = re.compile(r"^sg([0-9a-f]{8})_(\d+)_")
 
 
 def scratch_dir(prefix: str) -> str:
     """A fresh transient checkpoint dir under :func:`scratch_root`,
-    PID-tagged so a later session can tell live scratch from leaks.
+    tagged with its PID space and PID so a later session can tell live
+    scratch from leaks.
     Callers own cleanup (``shutil.rmtree(..., ignore_errors=True)`` in a
     ``finally`` — tmpfs space is RAM, so leaks are not free); dirs whose
     owner died without the ``finally`` are reclaimed here on the next
     session's first drain."""
     root = scratch_root()
     _sweep_stale_scratch(root)
-    return tempfile.mkdtemp(prefix=f"sg{os.getpid()}_{prefix}", dir=root)
+    return tempfile.mkdtemp(
+        prefix=f"sg{_pid_space_tag()}_{os.getpid()}_{prefix}", dir=root
+    )
 
 
 @contextmanager

@@ -17,14 +17,17 @@ Each ``run_cycle``:
    in parallel — the reference's keyBy fan-out became a partition-parallel
    window, no per-key loops, no driver iteration over shards;
 3. **cast** — the O9 whitelist projection;
-4. **commit** — mode-dispatched sink write (O12) with an epoch ledger, then
-   advance offsets transactionally-after-commit (state only moves forward
-   once data is durable; replays are absorbed by the epoch ledger and, in
-   upsert mode, by the MERGE keys).
+4. **commit** — stage the advanced offsets under the cycle's epoch, then
+   the mode-dispatched sink write (O12) with an epoch ledger. The ledger
+   record publishes data and offsets together: state only moves forward
+   once data is durable, and data never commits without its offsets.
 
 Offsets live in a parquet control table keyed by shard value — the
 checkpointable analogue of the reference's ``ValueState<Integer>``
-(``SnowflakeProcessFunction.java:21-23``). The per-key processing-time
+(``SnowflakeProcessFunction.java:21-23``) — one directory per epoch,
+``offsets.<epoch>``; the live table is the newest one whose epoch the
+sink's ledger has committed (the offset-log → execute → commit-log
+discipline of Structured Streaming). The per-key processing-time
 timers (O5) collapse into the cycle cadence: every cycle touches every
 shard, which is what the reference converges to when all timers share one
 interval.
@@ -37,6 +40,7 @@ playing Flink's checkpoint role.
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -127,16 +131,33 @@ class SnowflakeLikeIngestor:
 
     # -- state (the ValueState analogue) ------------------------------------
 
+    def _offsets_dir(self, epoch: int) -> str:
+        return f"{self.offsets_path}.{epoch}"
+
+    def _offset_epochs(self) -> list[int]:
+        parent, prefix = os.path.split(self.offsets_path + ".")
+        if not os.path.isdir(parent):
+            return []
+        return sorted(
+            int(n[len(prefix):])
+            for n in os.listdir(parent)
+            if n.startswith(prefix) and n[len(prefix):].isdigit()
+        )
+
     def load_offsets(self) -> DataFrame:
-        if os.path.exists(self.offsets_path):
-            return self.spark.read.parquet(self.offsets_path)
+        """The offsets table of the newest epoch the sink has committed.
+        A crash before that epoch's ledger record leaves the previous
+        table live; a staged table whose epoch never committed is ignored
+        until the cycle that next reaches its epoch overwrites it."""
+        live = [e for e in self._offset_epochs() if self.sink._committed(e)]
+        if live:
+            return self.spark.read.parquet(self._offsets_dir(live[-1]))
         return self.spark.createDataFrame([], "shard_value string, offset long")
 
-    def _save_offsets(self, offsets: DataFrame) -> None:
-        tmp = self.offsets_path + ".tmp"
-        offsets.coalesce(1).write.mode("overwrite").parquet(tmp)
-        back = self.spark.read.parquet(tmp)
-        back.write.mode("overwrite").parquet(self.offsets_path)
+    def _prune_offsets(self, live: int) -> None:
+        for e in self._offset_epochs():
+            if e < live:
+                shutil.rmtree(self._offsets_dir(e), ignore_errors=True)
 
     # -- one micro-batch cycle ---------------------------------------------
 
@@ -243,13 +264,12 @@ class SnowflakeLikeIngestor:
                 page, self.target_schema, lenient=self.dead_letter_path is not None
             )
 
-        # O12: commit batch
         self._cycle += 1
         rows = page.count()
-        action = self.sink.write_batch(page, epoch=self._cycle) if rows else "empty"
-
-        # O7: advance offsets only after the commit is durable
-        if rows and self.mode == "offset":
+        advance = rows > 0 and self.mode == "offset"
+        # O7: stage the advanced offsets under this epoch; the commit below
+        # makes them live (load_offsets)
+        if advance:
             ingested = (
                 page.groupBy(F.col(shard_c).cast("string").alias("shard_value"))
                 .agg(F.count(F.lit(1)).alias("__n"))
@@ -261,7 +281,14 @@ class SnowflakeLikeIngestor:
                     (F.col("offset") + F.coalesce("__n", F.lit(0))).alias("offset"),
                 )
             )
-            self._save_offsets(advanced)
+            advanced.coalesce(1).write.mode("overwrite").parquet(
+                self._offsets_dir(self._cycle)
+            )
+
+        # O12: commit batch
+        action = self.sink.write_batch(page, epoch=self._cycle) if rows else "empty"
+        if advance:
+            self._prune_offsets(live=self._cycle)
         return CycleStats(self._cycle, n_shards, n_new, rows, action)
 
     def run_until_drained(self, max_cycles: int = 100) -> list[CycleStats]:

@@ -37,13 +37,15 @@ def _uniq(prefix: str) -> str:
     return f"{prefix}_{uuid.uuid4().hex[:8]}"
 
 
-def _cfg(table: str, operation: str = "upsert") -> PipelineConfig:
+def _cfg(
+    table: str, operation: str = "upsert", query_size: int = 200
+) -> PipelineConfig:
     return PipelineConfig(
         source=SnowflakeSourceConfig(
             table="orders",
             shard_column="o_orderpriority",
             sort_column="o_orderdate",
-            query_size=200,
+            query_size=query_size,
         ),
         sink=IcebergSinkConfig(
             db="default",
@@ -81,6 +83,51 @@ def test_ingest_drains_source_exactly_once(spark, staging, tmp_path, mode):
     assert got.select("o_orderkey").distinct().count() == first.count()
     # golden: table contents equal the source slice exactly
     assert got.select(*first.columns).exceptAll(first).count() == 0
+
+
+@pytest.mark.parametrize("step", ["before_commit", "after_commit"])
+def test_offsets_commit_survives_crash(spark, staging, tmp_path, step):
+    """Offset mode stages each epoch's offsets table beside the live one,
+    and the sink's ledger record publishes it. A crash just before that
+    commit or just after it (before the superseded table is pruned) must
+    leave a non-empty table that matches the committed rows, and an
+    ingestor rebuilt from disk must drain to the target of an
+    uninterrupted drain. The sink appends, so a re-fetched page would
+    show up as duplicate rows."""
+    path, first, _, _ = staging
+
+    def ingestor(table: str, state: str) -> SnowflakeLikeIngestor:
+        cfg = _cfg(table, operation="append", query_size=60)
+        return SnowflakeLikeIngestor(
+            spark, cfg, path, str(tmp_path / state), "o_orderkey", mode="offset"
+        )
+
+    def boom(*a, **k):
+        raise RuntimeError("injected crash")
+
+    want = ingestor(_uniq("t_ref"), "ref")
+    want.run_until_drained()
+
+    table = _uniq("t_crash")
+    ing = ingestor(table, "crash")
+    assert ing.run_cycle().rows_ingested > 0
+    if step == "before_commit":
+        ing.sink.write_batch = boom
+    else:
+        ing._prune_offsets = boom
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ing.run_cycle()
+
+    resumed = ingestor(table, "crash")
+    while True:
+        offsets = resumed.load_offsets().collect()
+        assert offsets
+        assert sum(r.offset for r in offsets) == resumed.sink.read().count()
+        if resumed.run_cycle().rows_ingested == 0:
+            break
+    got, ref = resumed.sink.read(), want.sink.read()
+    assert got.count() == ref.count() == first.count()
+    assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
 
 
 def test_ingest_growing_source_and_new_shards(spark, staging, tmp_path):

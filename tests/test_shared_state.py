@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import sys
 
+import pytest
+
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entry
@@ -158,44 +160,6 @@ def test_sf_tag_is_lowercase_for_catalog_match(tmp_path):
     assert tag.startswith("sf0_1_mixed_")
 
 
-def test_round8_window_is_exactly_the_never_checked_set():
-    """The round-8 driver-correctness window must be EXACTLY the queries
-    with no CORRECTNESS_r01..r07 row (VERDICT round-7 item #1): 50 unique
-    names, all registered, none previously driver-checked, and first in
-    queries() iteration order so the driver's 50-slot sample hits all of
-    them."""
-    import glob
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    checked: set = set()
-    for f in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r0[1-7].json"))):
-        d = json.load(open(f))
-        qd = d.get("queries", d)
-        checked |= {k for k in qd if k.startswith("q_")}
-    if not checked:  # fresh clone without driver artifacts: nothing to pin
-        return
-    win = entry._ROUND8_WINDOW
-    assert len(win) == 50 and len(set(win)) == 50
-    q = entry.queries()
-    assert set(win) <= set(q)
-    assert not (set(win) & checked), set(win) & checked
-    never = set(q) - checked
-    assert set(win) == never, set(win) ^ never
-
-
-def test_round9_window_shape():
-    """Historical round-9 window (queries() now fronts the round-10
-    window): 50 unique registered names. Shape-only — round 9's changed
-    set was builder-attested, not artifact-derived; the artifact-driven
-    membership check resumed with the round-10 stalest rotation below
-    (ADVICE round 9, medium)."""
-    win = entry._ROUND9_WINDOW
-    assert len(win) == 50 and len(set(win)) == 50
-    assert set(win) <= set(entry.queries())
-
-
 def _latest_driver_round(repo: str, before_round: int) -> dict:
     """Latest driver-CORRECTNESS round per query, from the artifacts of
     rounds < ``before_round`` — a window fixed at round N is derived from
@@ -221,7 +185,27 @@ def _latest_driver_round(repo: str, before_round: int) -> dict:
     return latest
 
 
-def _assert_window_stalest(win, changed, latest):
+#: DRIVER_WINDOW was derived from the driver evidence of the rounds
+#: before this one; bump it together with the window when rotating.
+_WINDOW_EVIDENCE_BEFORE = 13
+
+
+def test_driver_window_stalest_machine_checked():
+    """Driver-window contract (VERDICT r12 item #8): changed queries
+    first, then EXACTLY the stalest by (latest driver CORRECTNESS round
+    before the window's round, name), filling to 50; queries() must
+    front the window for the driver's 50-slot sample."""
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    latest = _latest_driver_round(
+        repo, before_round=_WINDOW_EVIDENCE_BEFORE
+    )
+    if not latest:  # fresh clone without driver artifacts: nothing to pin
+        return
+    win = entry.DRIVER_WINDOW
+    changed = entry.DRIVER_WINDOW_CHANGED
+    assert list(entry.queries())[:50] == win  # dict-unpacking fronts it
     assert len(win) == 50 and len(set(win)) == 50
     assert set(win) <= set(entry.queries())
     assert win[: len(changed)] == changed
@@ -230,72 +214,6 @@ def _assert_window_stalest(win, changed, latest):
     assert win[len(changed):] == stalest, (
         "window's stalest portion drifted from the artifact-derived set"
     )
-
-
-def test_round10_window_stalest_machine_checked():
-    """Historical round-10 window contract (VERDICT r9 item #2 + ADVICE
-    r9 medium; queries() now fronts the round-11 window): the round's
-    changed queries first, then EXACTLY the stalest — derived from the
-    driver evidence that existed before round 10 (rounds 1–9)."""
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest = _latest_driver_round(repo, before_round=10)
-    if not latest:  # fresh clone without driver artifacts: nothing to pin
-        return
-    _assert_window_stalest(
-        entry._ROUND10_WINDOW, entry._ROUND10_CHANGED, latest
-    )
-
-
-def test_round11_window_stalest_machine_checked():
-    """Historical round-11 window contract (VERDICT r10 item #3;
-    queries() now fronts the round-12 window): changed queries first,
-    then EXACTLY the stalest by (latest driver CORRECTNESS round over
-    rounds 1–10, name), filling to 50."""
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest = _latest_driver_round(repo, before_round=11)
-    if not latest:  # fresh clone without driver artifacts: nothing to pin
-        return
-    _assert_window_stalest(
-        entry._ROUND11_WINDOW, entry._ROUND11_CHANGED, latest
-    )
-
-
-def test_round12_window_stalest_machine_checked():
-    """Historical round-12 window contract (VERDICT r11 item #3;
-    queries() now fronts the round-13 window): changed queries first,
-    then EXACTLY the stalest by (latest driver CORRECTNESS round over
-    rounds 1–11, name), filling to 50."""
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest = _latest_driver_round(repo, before_round=12)
-    if not latest:  # fresh clone without driver artifacts: nothing to pin
-        return
-    _assert_window_stalest(
-        entry._ROUND12_WINDOW, entry._ROUND12_CHANGED, latest
-    )
-
-
-def test_round13_window_stalest_machine_checked():
-    """Round-13 window contract (VERDICT r12 item #8): changed queries
-    first, then EXACTLY the stalest by (latest driver CORRECTNESS round
-    over rounds 1–12, name), filling to 50; queries() must front the
-    window for the driver's 50-slot sample.  This rotation retires the
-    r04 vintage (its last 4 names) — afterwards no query's newest driver
-    evidence is older than r05."""
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest = _latest_driver_round(repo, before_round=13)
-    if not latest:  # fresh clone without driver artifacts: nothing to pin
-        return
-    win = entry._ROUND13_WINDOW
-    assert list(entry.queries())[:50] == win  # dict-unpacking fronts it
-    _assert_window_stalest(win, entry._ROUND13_CHANGED, latest)
 
 
 def test_sf_tag_fingerprints_input_data(tmp_path):
@@ -626,7 +544,8 @@ def test_blas_runtime_cap_closes_foreign_session_hole(monkeypatch):
     before = get()
     try:
         st(4)  # simulate the unpinned foreign-session worker state
-        monkeypatch.delenv("OPENBLAS_NUM_THREADS", raising=False)
+        for var in blas.THREAD_VARS:
+            monkeypatch.delenv(var, raising=False)
         monkeypatch.setattr(blas, "_DONE", False)
         blas.ensure_blas_pinned()
         assert get() == 1, "runtime cap did not reach the loaded OpenBLAS"
@@ -636,3 +555,76 @@ def test_blas_runtime_cap_closes_foreign_session_hole(monkeypatch):
         assert get() == 4
     finally:
         st(before)
+
+
+def _fresh_blas(monkeypatch):
+    """The blas module with its once-per-process guard reset and the
+    runtime cap replaced by a recorder; returns (module, recorded calls)."""
+    from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.functions import (
+        blas,
+    )
+
+    calls: list = []
+    monkeypatch.setattr(blas, "_DONE", False)
+    monkeypatch.setattr(blas, "_DEFAULTED", frozenset(), raising=False)
+    monkeypatch.setattr(blas, "_runtime_cap", calls.append)
+    return blas, calls
+
+
+def test_blas_runtime_cap_reaches_every_loaded_openblas(monkeypatch, tmp_path):
+    """ADVICE r13 (low): numpy and scipy may each bundle an OpenBLAS; the
+    runtime cap must set the thread count in every one it loads, not stop
+    after the first."""
+    import ctypes
+
+    import numpy
+
+    from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.functions import (
+        blas,
+    )
+
+    libs = tmp_path / "numpy.libs"
+    libs.mkdir()
+    names = ["libopenblas64_p-r0.so", "libscipy_openblas64_-r1.so"]
+    for n in names:
+        (libs / n).write_bytes(b"")
+    capped: dict = {}
+
+    class FakeLib:
+        def __init__(self, path):
+            self.openblas_set_num_threads64_ = (
+                lambda n: capped.__setitem__(path.rsplit("/", 1)[-1], n)
+            )
+
+    monkeypatch.setattr(numpy, "__file__", str(tmp_path / "numpy" / "__init__.py"))
+    monkeypatch.setattr(ctypes, "CDLL", FakeLib)
+    blas._runtime_cap(1)
+    assert capped == {n: 1 for n in names}
+
+
+@pytest.mark.parametrize(
+    "var", ["OMP_NUM_THREADS", "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"]
+)
+def test_blas_any_thread_var_counts_as_pin(monkeypatch, var):
+    """ADVICE r13 (low): an operator-set thread var other than
+    OPENBLAS_NUM_THREADS is a pin that reached the process; the worker
+    must keep it instead of capping over it."""
+    blas, calls = _fresh_blas(monkeypatch)
+    for v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS",
+              "NUMEXPR_NUM_THREADS"):
+        monkeypatch.delenv(v, raising=False)
+    monkeypatch.setenv(var, "3")
+    blas.ensure_blas_pinned()
+    assert calls == []
+
+
+def test_blas_package_defaults_are_not_a_pin(monkeypatch):
+    """A foreign-session worker imports the package only after its numpy
+    loaded OpenBLAS, so the env defaults that import sets arrive too late
+    to count as a pin: the runtime cap must still run."""
+    blas, calls = _fresh_blas(monkeypatch)
+    for v in blas.THREAD_VARS:
+        monkeypatch.delenv(v, raising=False)
+    blas.pin_env("1")  # what the package import does in that worker
+    blas.ensure_blas_pinned()
+    assert calls == [1]

@@ -792,7 +792,9 @@ def test_stale_scratch_reclaimed_next_session(monkeypatch, tmp_path):
     """A drain SIGKILLed between mkdtemp and its ``finally`` leaks a
     RAM-backed dir (the default root is tmpfs); the next session's first
     scratch_dir() must reclaim it — and must NOT touch dirs whose owner
-    PID is alive (VERDICT r12 item #4 / ADVICE r12)."""
+    PID is alive (VERDICT r12 item #4 / ADVICE r12), nor dirs tagged by
+    another PID namespace or boot, whose PID says nothing here (ADVICE
+    r13)."""
     import os
 
     from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark import (
@@ -808,16 +810,21 @@ def test_stale_scratch_reclaimed_next_session(monkeypatch, tmp_path):
     if child == 0:
         os._exit(0)
     os.waitpid(child, 0)
-    dead = scratch / f"sg{child}_drain_killed_"
+    tag = S._pid_space_tag()
+    dead = scratch / f"sg{tag}_{child}_drain_killed_"
     dead.mkdir()
     (dead / "offsets").write_text("leak")
-    alive = scratch / "sg1_drain_other_session_"  # PID 1 is always alive
+    alive = scratch / f"sg{tag}_1_drain_other_session_"  # PID 1 is always alive
     alive.mkdir()
+    other = "0" * 8 if tag != "0" * 8 else "f" * 8
+    foreign = scratch / f"sg{other}_{child}_drain_other_host_"
+    foreign.mkdir()
     mine = S.scratch_dir("drain_probe_")
     try:
         assert not dead.exists(), "stale scratch of a dead PID survived"
         assert alive.exists(), "live foreign scratch was swept"
-        assert os.path.basename(mine).startswith(f"sg{os.getpid()}_")
+        assert foreign.exists(), "another PID space's scratch was swept"
+        assert os.path.basename(mine).startswith(f"sg{tag}_{os.getpid()}_")
     finally:
         import shutil
 
