@@ -41,6 +41,15 @@ from ..operators.merge import merge_upsert
 _OVERWRITE_MODE_LOCK = threading.RLock()
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the blocks of a DataFrame returned by ``localCheckpoint``
+    now, instead of when the JVM Dataset is garbage-collected and the
+    ContextCleaner notices. Its analyzed plan is the LogicalRDD holding the
+    blocks. Call it only once nothing will read ``df`` again: a
+    checkpointed plan cannot recompute its blocks."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def glue_catalog_confs(
     catalog_name: str, warehouse: str, *, region: str | None = None
 ) -> dict[str, str]:
@@ -612,16 +621,21 @@ class CatalogSink:
             self._record(epoch)
             return f"iceberg-{op}"
         post: DataFrame | None = None
-        if op == "append":
-            self._append(batch)  # post-state needs the read-back
-        elif op == "overwrite":
-            post = self._overwrite(batch)
-        elif op == "upsert":
-            post = self._upsert(batch)
-        else:  # unreachable: config validates, but keep the reference's throw
-            raise UnsupportedOperationError(op)
-        if self.snapshots:
-            self._snapshot(batch, epoch, post_state=post)
+        held: list[DataFrame] = []  # checkpoints this commit made
+        try:
+            if op == "append":
+                self._append(batch)  # post-state needs the read-back
+            elif op == "overwrite":
+                post = self._overwrite(batch)
+            elif op == "upsert":
+                post = self._upsert(batch, held)
+            else:  # unreachable: config validates, but keep the reference's throw
+                raise UnsupportedOperationError(op)
+            if self.snapshots:
+                self._snapshot(batch, epoch, post_state=post)
+        finally:
+            for df in held:
+                release_checkpoint(df)
         self._record(epoch)
         return op
 
@@ -642,7 +656,7 @@ class CatalogSink:
             ).insertInto(self.table)
         return batch
 
-    def _upsert(self, batch: DataFrame) -> DataFrame:
+    def _upsert(self, batch: DataFrame, held: list[DataFrame]) -> DataFrame:
         keys = list(self.cfg.upsert_fields)
         version = self.version_column or keys[-1]
         parts = list(self.cfg.partition_fields)
@@ -680,8 +694,10 @@ class CatalogSink:
         if parts:
             merged = merged.repartition(*parts)
         if not target_empty:
-            # self-join on the target table: materialize before overwriting
+            # self-join on the target table: materialize before overwriting;
+            # the caller releases it once the snapshot has read it
             merged = merged.localCheckpoint(eager=True)
+            held.append(merged)
         with self._overwrite_mode("dynamic"):
             self._aligned(merged).write.format("parquet").mode(
                 "overwrite"

@@ -7,24 +7,33 @@ values over JDBC → keyBy(shard) → per-key state {offset, timer} → paginate
 Spark-native re-expression (SURVEY.md §3.4): a micro-batch cycle engine.
 Each ``run_cycle``:
 
-1. **discover** — distinct shard values of the source (O1); newcomers are
-   bootstrapped at offset 0 (O4; ``new_shards`` diff — the reference
-   re-emits everything and no-ops repeats, we diff declaratively);
+1. **discover** — distinct shard values of the source (O1), collected
+   once to the driver; newcomers are bootstrapped at offset 0 (O4; the
+   reference re-emits everything and no-ops repeats, we diff the
+   collected set against the known offsets);
 2. **fetch** — ONE plan computes every shard's next page: rank rows per
    shard with ``row_number`` over (sort, tiebreak) (deterministic fix of
    the reference's bare LIMIT/OFFSET, SURVEY.md §2.2), broadcast-join the
-   per-shard offsets, keep ``offset < rn ≤ offset+size``. All shards fetch
-   in parallel — the reference's keyBy fan-out became a partition-parallel
-   window, no per-key loops, no driver iteration over shards;
-3. **cast** — the O9 whitelist projection;
+   per-shard offsets (a driver-built local relation), keep
+   ``offset < rn ≤ offset+size``. All shards fetch in parallel — the
+   reference's keyBy fan-out became a partition-parallel window, no
+   per-key loops, no driver iteration over shards. The page is
+   materialized ONCE (``localCheckpoint``): one ``groupBy(shard).count``
+   over it gives the row total and each shard's advance, so the rows
+   committed and the offsets advanced come from the same read of the
+   source (the reference's ``offset += rows_returned``);
+3. **cast** — the O9 whitelist projection and the dead-letter write, both
+   over the materialized page;
 4. **commit** — stage the advanced offsets under the cycle's epoch, then
    the mode-dispatched sink write (O12) with an epoch ledger. The ledger
    record publishes data and offsets together: state only moves forward
    once data is durable, and data never commits without its offsets.
+   The cycle then releases its page checkpoint.
 
-Offsets live in a parquet control table keyed by shard value — the
-checkpointable analogue of the reference's ``ValueState<Integer>``
-(``SnowflakeProcessFunction.java:21-23``) — one directory per epoch,
+Offsets are driver metadata, one row per shard — the checkpointable
+analogue of the reference's ``ValueState<Integer>``
+(``SnowflakeProcessFunction.java:21-23``): a parquet file written and
+read with pyarrow on the driver (no Spark job), one directory per epoch,
 ``offsets.<epoch>``; the live table is the newest one whose epoch the
 sink's ledger has committed (the offset-log → execute → commit-log
 discipline of Structured Streaming). The per-key processing-time
@@ -43,11 +52,13 @@ import os
 import shutil
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..sinks.catalog import CatalogSink
+from ..sinks.catalog import CatalogSink, release_checkpoint
 
 
 @dataclass
@@ -57,6 +68,15 @@ class CycleStats:
     new_shards: int
     rows_ingested: int
     action: str
+
+
+def _offsets_table(offsets: dict[str, int]) -> pa.Table:
+    return pa.table(
+        {
+            "shard_value": pa.array(list(offsets), pa.string()),
+            "offset": pa.array(list(offsets.values()), pa.int64()),
+        }
+    )
 
 
 class SnowflakeLikeIngestor:
@@ -144,15 +164,29 @@ class SnowflakeLikeIngestor:
             if n.startswith(prefix) and n[len(prefix):].isdigit()
         )
 
-    def load_offsets(self) -> DataFrame:
-        """The offsets table of the newest epoch the sink has committed.
-        A crash before that epoch's ledger record leaves the previous
-        table live; a staged table whose epoch never committed is ignored
-        until the cycle that next reaches its epoch overwrites it."""
+    def load_offsets(self) -> dict[str, int]:
+        """``{shard_value: offset}`` from the offsets table of the newest
+        epoch the sink has committed. A crash before that epoch's ledger
+        record leaves the previous table live; a staged table whose epoch
+        never committed is ignored until the cycle that next reaches its
+        epoch overwrites it. One row per shard: driver metadata, read
+        without a Spark job, like the sink's epoch ledger."""
         live = [e for e in self._offset_epochs() if self.sink._committed(e)]
-        if live:
-            return self.spark.read.parquet(self._offsets_dir(live[-1]))
-        return self.spark.createDataFrame([], "shard_value string, offset long")
+        if not live:
+            return {}
+        t = pq.read_table(self._offsets_dir(live[-1]), columns=["shard_value", "offset"])
+        return dict(zip(t.column("shard_value").to_pylist(), t.column("offset").to_pylist()))
+
+    def _stage_offsets(self, epoch: int, offsets: dict[str, int]) -> None:
+        """Write ``offsets.<epoch>`` from the driver: temp file + rename, so
+        the table is either whole or absent. Whatever a crashed cycle left
+        at this uncommitted epoch is replaced."""
+        d = self._offsets_dir(epoch)
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
+        tmp = os.path.join(d, ".offsets.parquet.tmp")  # dot-prefixed: never read
+        pq.write_table(_offsets_table(offsets), tmp)
+        os.rename(tmp, os.path.join(d, "offsets.parquet"))
 
     def _prune_offsets(self, live: int) -> None:
         for e in self._offset_epochs():
@@ -193,37 +227,58 @@ class SnowflakeLikeIngestor:
         )
         return src.join(tgt.select(*keys), keys, "left_anti")
 
+    def _cast(self, page: DataFrame, rows: int) -> DataFrame:
+        """O9: cast projection against the declared contract — added source
+        columns are dropped, declared columns are cast, failed casts are
+        ledgered to the dead-letter path; without a declared schema the
+        staging is already typed and the cast is the identity."""
+        if self.target_schema is None:
+            return page
+        from ..schema import cast_deadletter, cast_projection
+
+        if self.dead_letter_path is not None and rows:
+            # one directory per epoch, overwritten: a replay of an epoch
+            # that crashed before its commit rewrites the same dead letters
+            # instead of appending them again
+            key = list(self.cfg.sink.upsert_fields)[0]
+            cast_deadletter(page, self.target_schema, key).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(self.dead_letter_path, f"epoch={self._cycle}"))
+        # with a dead-letter ledger the main path survives bad values
+        # (try_cast ⇒ null, the failure already recorded); without one,
+        # keep the reference's fail-fast ANSI cast
+        return cast_projection(
+            page, self.target_schema, lenient=self.dead_letter_path is not None
+        )
+
     def run_cycle(self) -> CycleStats:
         cfg = self.cfg.source
         src = self._source()
         shard_c = cfg.shard_column
+        shard = F.col(shard_c).cast("string")
 
         # O1+O4: discover shards, bootstrap newcomers at offset 0
-        current = src.select(
-            F.col(shard_c).cast("string").alias("shard_value")
-        ).distinct()
+        shard_vals = [r[0] for r in src.select(shard).distinct().collect()]
         if self.mode == "offset":
             known = self.load_offsets()
         elif self.spark.catalog.tableExists(self.sink.table):
             # unseen mode: the target table is the state — known shards are
             # the partition values already ingested
-            known = self.sink.read().select(
-                F.col(shard_c).cast("string").alias("shard_value")
-            ).distinct().withColumn("offset", F.lit(0))
+            known = {r[0]: 0 for r in self.sink.read().select(shard).distinct().collect()}
         else:
-            known = self.load_offsets()  # empty schema helper
-        offsets = (
-            current.join(known.select("shard_value", "offset"), "shard_value", "left")
-            .select("shard_value", F.coalesce("offset", F.lit(0)).alias("offset"))
-        )
-        n_shards = offsets.count()
-        n_new = current.join(known.select("shard_value"), "shard_value", "left_anti").count()
+            known = {}
+        n_new = len(set(shard_vals) - known.keys())
 
         # O6/O7: every shard's next page in one ranked plan
         w = Window.partitionBy(shard_c).orderBy(
             F.col(cfg.sort_column).asc(), F.col(self.tiebreaker).asc()
         )
         if self.mode == "offset":
+            # a local relation: the broadcast side ships driver data and
+            # scans nothing
+            offsets = self.spark.createDataFrame(
+                _offsets_table({s: known.get(s, 0) for s in shard_vals})
+            )
             ranked = src.withColumn("__rn", F.row_number().over(w))
             page = (
                 ranked.join(
@@ -237,59 +292,39 @@ class SnowflakeLikeIngestor:
                 .drop("shard_value", "offset", "__rn")
             )
         else:  # "unseen": page over rows whose equality keys aren't ingested
-            shard_vals = [r.shard_value for r in current.collect()]
             page = (
                 self.pending_unseen(src, shard_vals)
                 .withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") <= cfg.query_size)
                 .drop("__rn")
             )
-
-        # O9: cast projection against the declared contract — added source
-        # columns are dropped, declared columns are cast, failed casts are
-        # ledgered to the dead-letter path; without a declared schema the
-        # staging is already typed and the cast is the identity.
-        if self.target_schema is not None:
-            from ..schema import cast_deadletter, cast_projection
-
-            if self.dead_letter_path is not None:
-                key = list(self.cfg.sink.upsert_fields)[0]
-                cast_deadletter(page, self.target_schema, key).write.mode(
-                    "append"
-                ).parquet(self.dead_letter_path)
-            # with a dead-letter ledger the main path survives bad values
-            # (try_cast ⇒ null, the failure already recorded); without one,
-            # keep the reference's fail-fast ANSI cast
-            page = cast_projection(
-                page, self.target_schema, lenient=self.dead_letter_path is not None
-            )
-
-        self._cycle += 1
-        rows = page.count()
-        advance = rows > 0 and self.mode == "offset"
-        # O7: stage the advanced offsets under this epoch; the commit below
-        # makes them live (load_offsets)
-        if advance:
-            ingested = (
-                page.groupBy(F.col(shard_c).cast("string").alias("shard_value"))
-                .agg(F.count(F.lit(1)).alias("__n"))
-            )
-            advanced = (
-                offsets.join(ingested, "shard_value", "left")
-                .select(
-                    "shard_value",
-                    (F.col("offset") + F.coalesce("__n", F.lit(0))).alias("offset"),
+        # the cycle's one read of the source: the count, the offset
+        # advance, the dead letters and the sink write all read these
+        # blocks, so what commits is exactly what advanced the offsets.
+        # Not cache(): the cache is keyed by plan, and a later cycle's
+        # identical plan over a changed staging would hit this page.
+        page = page.localCheckpoint(eager=True)
+        try:
+            ingested = {r[0]: r[1] for r in page.groupBy(shard).count().collect()}
+            rows = sum(ingested.values())
+            self._cycle += 1
+            batch = self._cast(page, rows)
+            advance = rows > 0 and self.mode == "offset"
+            # O7: stage the advanced offsets under this epoch; the commit
+            # below makes them live (load_offsets)
+            if advance:
+                self._stage_offsets(
+                    self._cycle,
+                    {s: known.get(s, 0) + ingested.get(s, 0) for s in shard_vals},
                 )
-            )
-            advanced.coalesce(1).write.mode("overwrite").parquet(
-                self._offsets_dir(self._cycle)
-            )
 
-        # O12: commit batch
-        action = self.sink.write_batch(page, epoch=self._cycle) if rows else "empty"
+            # O12: commit batch
+            action = self.sink.write_batch(batch, epoch=self._cycle) if rows else "empty"
+        finally:
+            release_checkpoint(page)
         if advance:
             self._prune_offsets(live=self._cycle)
-        return CycleStats(self._cycle, n_shards, n_new, rows, action)
+        return CycleStats(self._cycle, len(shard_vals), n_new, rows, action)
 
     def run_until_drained(self, max_cycles: int = 100) -> list[CycleStats]:
         """Drain the source: cycles until a pass ingests nothing (the batch

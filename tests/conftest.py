@@ -1,10 +1,14 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+#: the checkout these tests live in: its package is the one under test,
+#: wherever the checkout sits
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.session import (  # noqa: E402
     get_spark,

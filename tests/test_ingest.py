@@ -5,12 +5,9 @@ wrapper."""
 
 from __future__ import annotations
 
-import sys
 import uuid
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
@@ -120,14 +117,184 @@ def test_offsets_commit_survives_crash(spark, staging, tmp_path, step):
 
     resumed = ingestor(table, "crash")
     while True:
-        offsets = resumed.load_offsets().collect()
+        offsets = resumed.load_offsets()
         assert offsets
-        assert sum(r.offset for r in offsets) == resumed.sink.read().count()
+        assert sum(offsets.values()) == resumed.sink.read().count()
         if resumed.run_cycle().rows_ingested == 0:
             break
     got, ref = resumed.sink.read(), want.sink.read()
     assert got.count() == ref.count() == first.count()
     assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
+
+
+def test_dead_letter_replay_writes_each_row_once(spark, tmp_path):
+    """A crash between an epoch's dead-letter write and its sink commit
+    makes the ingestor rebuilt from disk run that epoch again. Each
+    epoch's dead letters overwrite their own directory, so after the
+    drain every failed value is recorded exactly once."""
+    import collections
+
+    import pyspark.sql.types as T
+
+    rows = [
+        (f"{i:04d}", f"S{i % 3}", f"bad{i}" if i % 7 == 0 else f"{i}.5")
+        for i in range(90)
+    ]
+    injected = collections.Counter(
+        (k, "price", raw) for k, _, raw in rows if raw.startswith("bad")
+    )
+    path = str(tmp_path / "src")
+    spark.createDataFrame(rows, "k string, shard string, price string").write.parquet(path)
+    target = T.StructType(
+        [
+            T.StructField("k", T.StringType()),
+            T.StructField("shard", T.StringType()),
+            T.StructField("price", T.DoubleType()),
+        ]
+    )
+    cfg = PipelineConfig(
+        source=SnowflakeSourceConfig(
+            table="dl", shard_column="shard", sort_column="k", query_size=10
+        ),
+        sink=IcebergSinkConfig(
+            db="default",
+            table_name=_uniq("t_dl_replay"),
+            partition_fields=("shard",),
+            upsert_fields=("k", "shard"),
+            operation="upsert",
+        ),
+    )
+    dl = str(tmp_path / "dead_letter")
+
+    def ingestor() -> SnowflakeLikeIngestor:
+        return SnowflakeLikeIngestor(
+            spark, cfg, path, str(tmp_path / "state"), "k", mode="offset",
+            target_schema=target, dead_letter_path=dl,
+        )
+
+    def boom(*a, **k):
+        raise RuntimeError("injected crash")
+
+    ing = ingestor()
+    assert ing.run_cycle().rows_ingested > 0
+    ing.sink.write_batch = boom
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ing.run_cycle()
+
+    resumed = ingestor()
+    resumed.run_until_drained()
+    assert resumed.sink.read().count() == len(rows)
+    dead = collections.Counter(
+        (r.row_key, r.field, r.raw) for r in spark.read.parquet(dl).collect()
+    )
+    assert dead == injected
+
+
+def test_staging_change_mid_cycle_commits_what_advanced(spark, staging, tmp_path):
+    """The SURVEY §2.2 hazard between two reads of one cycle: rows that
+    sort last in a shard land in the staging after the cycle fetched its
+    page and before the sink write. The write must commit exactly the
+    rows the offsets advanced by. With an append sink, a write that
+    re-read the source would commit the late rows now and fetch them
+    again next cycle. The source is the sharded_parquet connector, which
+    reads the staging at every evaluation, as a database would (a plain
+    parquet read keeps the file listing it planned with)."""
+    from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.sources import (
+        pysource,
+    )
+
+    path, first, _, _ = staging
+    pysource.register(spark)
+
+    def read_via_connector():
+        return (
+            spark.read.format("sharded_parquet")
+            .option("path", path)
+            .option("shard_column", "o_orderpriority")
+            .option("sort_column", "o_orderdate")
+            .load()
+        )
+
+    ing = SnowflakeLikeIngestor(
+        spark, _cfg(_uniq("t_mutate"), operation="append"), path,
+        str(tmp_path / "state"), "o_orderkey", mode="offset",
+        source_reader=read_via_connector,
+    )
+    top = first.agg(F.max("o_orderkey")).head()[0]
+    late = (
+        first.filter(F.col("o_orderpriority") == "1-URGENT")
+        .limit(5)
+        .withColumn("o_orderkey", F.col("o_orderkey") + top)
+        .withColumn("o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 36500 DAYS"))
+    )
+    inner, fired = ing.sink.write_batch, []
+
+    def write_batch(batch, epoch):
+        if not fired:
+            fired.append(epoch)
+            late.write.mode("append").parquet(path)
+        return inner(batch, epoch)
+
+    ing.sink.write_batch = write_batch
+    while True:
+        st = ing.run_cycle()
+        assert sum(ing.load_offsets().values()) == ing.sink.read().count()
+        if st.rows_ingested == 0:
+            break
+    assert fired
+    got = ing.sink.read()
+    n_source = spark.read.parquet(path).count()
+    assert n_source == first.count() + 5
+    assert got.count() == got.select("o_orderkey").distinct().count() == n_source
+
+
+def test_cycle_job_count_pin(spark, staging, tmp_path):
+    """One data cycle and one empty cycle in offset + upsert mode run at
+    most half the Spark jobs they ran on this fixture when every consumer
+    of the page re-ran its plan (26 and 15)."""
+    path, first, _, _ = staging
+    ing = SnowflakeLikeIngestor(
+        spark, _cfg(_uniq("t_jobs")), path, str(tmp_path / "state"),
+        "o_orderkey", mode="offset",
+    )
+    sc = spark.sparkContext
+
+    def counted(group: str):
+        sc.setJobGroup(group, group)
+        try:
+            st = ing.run_cycle()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return st, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    data, data_jobs = counted(_uniq("data_cycle"))
+    empty, empty_jobs = counted(_uniq("empty_cycle"))
+    assert data.rows_ingested == first.count() and empty.rows_ingested == 0
+    assert data_jobs <= 26 / 2, data_jobs
+    assert empty_jobs <= 15 / 2, empty_jobs
+
+
+def test_cycle_releases_its_checkpoints(spark, staging, tmp_path):
+    """A cycle frees the blocks it checkpointed (the fetched page and the
+    upsert's merge) before it returns, instead of leaving them to the JVM
+    garbage collector and the ContextCleaner."""
+    path, _, _, _ = staging
+    ing = SnowflakeLikeIngestor(
+        spark, _cfg(_uniq("t_release"), query_size=30), path,
+        str(tmp_path / "state"), "o_orderkey", mode="offset",
+    )
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set[int]:
+        return set(jsc.getPersistentRDDs().keys())
+
+    for _ in range(6):
+        before = persisted()
+        assert ing.run_cycle().rows_ingested > 0
+        leftover = persisted() - before
+        assert not leftover, f"cycle {ing._cycle} left {sorted(leftover)} persisted"
 
 
 def test_ingest_growing_source_and_new_shards(spark, staging, tmp_path):

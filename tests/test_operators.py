@@ -4,11 +4,7 @@ the multimodal plumbing."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
@@ -2207,8 +2203,12 @@ def test_persistent_staging_replay_is_identical(spark):
     (replay-idempotence) and return bit-identical results."""
     import importlib.util
 
+    import os
+
+    from .conftest import ROOT
+
     spec = importlib.util.spec_from_file_location(
-        "entry_replay_test", "/root/repo/__spark_entry__.py"
+        "entry_replay_test", os.path.join(ROOT, "__spark_entry__.py")
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

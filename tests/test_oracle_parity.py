@@ -4,11 +4,7 @@ sf0.01."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod  # noqa: E402
 

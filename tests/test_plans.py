@@ -3,10 +3,6 @@ makes must be visible in the actual Catalyst plan."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 from pyspark.sql import functions as F
 

@@ -5,11 +5,7 @@ its shipped marker on failure."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entry
 from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.sources import (

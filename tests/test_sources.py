@@ -3,11 +3,7 @@ default, PERMISSIVE quarantine routing, whitelist validation."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T

@@ -5,14 +5,10 @@ the parameter space, not just the published constants."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.operators.tpch import (  # noqa: E402
     discounted_revenue,
