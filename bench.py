@@ -22,6 +22,7 @@ from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spar
     streaming as _streaming,
 )
 from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.session import (
+    codegen_compilations,
     get_spark,
 )
 
@@ -113,6 +114,10 @@ def main() -> None:
     # row is adjudicable from artifacts — same counts + bigger wall =
     # box noise; different counts = structural.
     stream_drains: dict[str, dict] = {}
+    # Janino compilations in each query's attempts after the first: its
+    # plans are then cached, so a non-zero count names a query whose
+    # generated code changes from run to run
+    warm_compiles: dict[str, int] = {}
     sweep_skips = 0
     import gc
 
@@ -125,6 +130,7 @@ def main() -> None:
         entrymod._SHARED_TRACE = trace
         _streaming.DRAIN_TELEMETRY.clear()
         best = float("inf")
+        warm_compiles[name] = 0
         for attempt in range(3):
             # two runs for everyone; a third only when the best is still
             # sub-second — there, per-run scheduling noise (±0.3 s on a
@@ -132,10 +138,13 @@ def main() -> None:
             # reads a 0.2 s query as 0.6 s
             if attempt == 2 and best >= 1.0:
                 break
+            compiles = codegen_compilations(spark)
             t0 = time.perf_counter()
             force(fn(spark, sf_dir))
             best = min(best, time.perf_counter() - t0)
             spark.catalog.clearCache()
+            if attempt:
+                warm_compiles[name] += codegen_compilations(spark) - compiles
         entrymod._SHARED_TRACE = None
         # label only WARM consumption ("hit"): in NO_SHARED mode every
         # lookup is a "compute" the query itself paid for, and labeling
@@ -203,6 +212,8 @@ def main() -> None:
                 "shared_legs": shared_times,
                 "queries_shared_warm": shared_warm,
                 "stream_drains": stream_drains,
+                "codegen_warm_compiles": warm_compiles,
+                "codegen_warm_compiles_total": sum(warm_compiles.values()),
                 "no_shared_mode": no_shared,
                 "harness": {
                     "rev": harness_rev,

@@ -11,6 +11,18 @@ for how it behaves on a 1000-executor cluster at 100 TB:
   never row-at-a-time pickling.
 * ``spark.sql.shuffle.partitions`` is only the pre-AQE upper bound; at scale
   set it ≈ 2-3× total cores and let AQE coalesce down.
+* **Generated-code cache of 1024 entries** (Spark's default is 100) — the
+  engine re-runs the same plans on every poll, and whole-stage codegen
+  only stays warm if one cycle's classes fit. One warm pass of the
+  benchmark's ``query_mix`` uses ~190 generated classes; the LRU cache of
+  100 evicted most of them before their reuse, so every warm pass
+  recompiled 120-190 of them in Janino, and with 1024 it compiles 0
+  (its ``work_wall_rel`` fell ~23%). One pass over all 298 registered
+  queries compiles ~3500 distinct classes, so the cache stays bounded
+  well below the full registry: after that pass Metaspace held 184 MiB
+  with 100 entries, 190 MiB with 1024 and 205 MiB with 4096. The conf is
+  static (fixed when the JVM first generates code), so a session this
+  function did not build keeps its own value.
 """
 
 from __future__ import annotations
@@ -53,6 +65,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     # BLAS thread caps for EXECUTOR processes on a real cluster (separate
     # JVMs that do not inherit this process's env). Local mode inherits
@@ -65,6 +78,15 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def codegen_compilations(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM since it started: the count
+    of ``CodegenMetrics.METRIC_COMPILATION_TIME``, which Spark updates on
+    every generated-code cache miss. Take the difference around a run; a
+    warm re-run of a plan whose classes are cached adds 0."""
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(codegen.METRIC_COMPILATION_TIME().getCount())
 
 
 def spill_safe_confs(

