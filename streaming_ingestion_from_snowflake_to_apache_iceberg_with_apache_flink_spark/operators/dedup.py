@@ -48,8 +48,8 @@ def graph_shuffle_scope(df: DataFrame, n_edges: int):
     is pure scheduling overhead. At real scale ``edges/200k`` exceeds
     the session setting and this is a no-op; restores the session value
     on exit either way. The set→loop→restore sequence is serialized by
-    ``ranks._SHUFFLE_SCOPE_LOCK`` (the shared-mutable-conf hazard the
-    sink fixed with ``_OVERWRITE_MODE_LOCK``)."""
+    ``ranks._SHUFFLE_SCOPE_LOCK`` (see that lock for the shared-conf
+    hazard it covers and the one it does not)."""
     return scoped_shuffle_partitions(df.sparkSession, n_edges // 200_000 + 2)
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
@@ -153,12 +153,6 @@ def _hashed_shingles(
             *cols, f"transform({sh}, s -> {H.spark_h32('s')}) as shingles"
         )
     )
-
-
-def shingle_index(documents: DataFrame, n: int = 3) -> DataFrame:
-    """Exploded inverted index: (shingle, doc_id), distinct shingles/doc."""
-    sh = H.spark_shingles(_TOKENS, n)
-    return documents.selectExpr("doc_id", f"explode({sh}) as shingle")
 
 
 def ngram_jaccard_pairs(

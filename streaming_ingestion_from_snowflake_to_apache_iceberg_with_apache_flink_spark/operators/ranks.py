@@ -41,9 +41,13 @@ from pyspark.sql import functions as F
 PID, OFF = "__pid", "__off"
 
 #: serializes set→work→restore of the session-global shuffle-partition
-#: conf (same shared-mutable-conf hazard as sinks._OVERWRITE_MODE_LOCK):
-#: without it a concurrent query on the same SparkSession could plan its
-#: shuffles at the scoped (tiny) partition count
+#: conf: without it a concurrent query of this module on the same
+#: SparkSession could plan its shuffles at the scoped (tiny) partition
+#: count. It orders only the scopes taken here; a foreign thread that
+#: shares the session still sees the scoped value mid-block. The sink
+#: avoids the hazard outright by keeping its partition overwrite mode in
+#: each table's OPTIONS (sinks/catalog.py); a shuffle-partition count has
+#: no table to live on, so this scope keeps its lock
 _SHUFFLE_SCOPE_LOCK = RLock()
 
 

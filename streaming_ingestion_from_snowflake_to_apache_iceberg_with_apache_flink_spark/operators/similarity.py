@@ -29,11 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.partitioning import spread
-from ..functions.vectors import cosine, dot, norm, to_double
-
-
-def _sim(a: Column, b: Column) -> Column:
-    return F.round(cosine(a, b), 4).cast("double")
+from ..functions.vectors import dot, norm, to_double
 
 
 def _sim_prenorm(a: Column, b: Column, na: Column, nb: Column) -> Column:

@@ -20,6 +20,13 @@ this module changes:
   copy-on-write merge scoped to touched partitions — at 100 TB the rewrite
   cost is bounded by the partitions a batch touches, never the table.
 
+The overwrite mode is a table property, as in Iceberg: every fallback table
+is created with the dynamic partition-overwrite OPTION, which Spark reads on
+each ``insertInto(overwrite)`` (a writer ``.option`` does not reach it). An
+overwrite replaces only the partitions its rows land in, whatever the
+session conf says, and the sink sets no session conf. Partitions that must
+go (emptied by a purge, expired snapshots) are dropped by DDL.
+
 Exactly-once: every committed batch records its epoch in a ``__commits``
 ledger table; ``write_batch`` skips epochs already present, which makes the
 ``foreachBatch`` replay after a crash idempotent (the Spark commit-log role
@@ -28,17 +35,11 @@ of Flink's checkpoint barrier — SURVEY.md §3.4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-
-import threading
 
 from ..config import IcebergSinkConfig, UnsupportedOperationError
 from ..operators.merge import merge_upsert
-
-#: serializes set→write→restore of the session-global
-#: partitionOverwriteMode conf across writer threads (see _overwrite_mode)
-_OVERWRITE_MODE_LOCK = threading.RLock()
 
 
 def release_checkpoint(df: DataFrame) -> None:
@@ -48,6 +49,16 @@ def release_checkpoint(df: DataFrame) -> None:
     blocks. Call it only once nothing will read ``df`` again: a
     checkpointed plan cannot recompute its blocks."""
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _part_lit(val) -> str:
+    """A partition-spec value as a SQL literal: ``NULL``, or a quoted string
+    with backslashes and quotes escaped. The spec parser casts it to the
+    partition column's type, so dates and ints round-trip; naked
+    interpolation broke on dates, quotes and NULLs."""
+    if val is None:
+        return "NULL"
+    return "'" + str(val).replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def glue_catalog_confs(
@@ -100,42 +111,8 @@ class CatalogSink:
         self.commits = f"{cfg.db}.{cfg.table_name}__commits"
         self.history = f"{cfg.db}.{cfg.table_name}__history"
         self.iceberg = self._iceberg_available(spark)
+        self._overwrite_checked = False
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {cfg.db}")
-
-    def _overwrite_mode(self, mode: str):
-        """Scope ``spark.sql.sources.partitionOverwriteMode`` around ONE
-        write and restore it in ``finally`` — every overwrite site names
-        the mode it needs instead of trusting session state.  Relying on a
-        session-wide default was a data-loss hazard: if a crash (or any
-        other caller) left the conf ``static`` while a dynamic-overwrite
-        site ran, the write would erase every partition not present in
-        its batch — on the GDPR purge path that is mass deletion.
-
-        The conf is SESSION-global, so two writer threads in one
-        SparkSession could still interleave set/restore (e.g. a streaming
-        foreachBatch overwrite racing expire_snapshots' static write) and
-        execute a dynamic site under static — the process-wide lock below
-        makes the set→write→restore sequence atomic.  Serializing
-        overwrite WRITES (reads and non-overwrite writes are unaffected)
-        is the correct trade: on a real Iceberg catalog overwrite
-        atomicity comes from the table format and this fallback path is
-        not taken."""
-        import contextlib
-
-        key = "spark.sql.sources.partitionOverwriteMode"
-        spark = self.spark
-
-        @contextlib.contextmanager
-        def scoped():
-            with _OVERWRITE_MODE_LOCK:
-                prev = spark.conf.get(key, "static")
-                spark.conf.set(key, mode)
-                try:
-                    yield
-                finally:
-                    spark.conf.set(key, prev)
-
-        return scoped()
 
     # -- Iceberg branch (format-v2 merge-on-read parity) ---------------------
 
@@ -267,15 +244,66 @@ class CatalogSink:
         part_clause = f"PARTITIONED BY ({', '.join(parts)})" if parts else ""
         existed = os.path.exists(loc)
         self.spark.sql(
-            f"CREATE TABLE {name} ({cols}) USING parquet {part_clause} LOCATION '{loc}'"
+            f"CREATE TABLE {name} ({cols}) USING parquet "
+            f"OPTIONS ('partitionOverwriteMode'='dynamic') {part_clause} "
+            f"LOCATION '{loc}'"
         )
         if parts and existed:
             self.spark.catalog.recoverPartitions(name)
+
+    def _require_dynamic_overwrite(self) -> None:
+        """Fail closed, once per instance and before its first write, on a
+        partitioned data or history table that exists without the dynamic
+        overwrite option (made by older code or a user's own DDL): under a
+        static session conf its overwrites would erase the partitions a
+        batch does not touch. ``DESCRIBE`` runs no Spark job."""
+        if self._overwrite_checked or self.iceberg:
+            return
+        names = [self.table] if self.cfg.partition_fields else []
+        if self.snapshots:
+            names.append(self.history)
+        for name in names:
+            if not self.spark.catalog.tableExists(name):
+                continue
+            desc = self.spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+            props = next(
+                (r.data_type for r in desc if r.col_name == "Storage Properties"), ""
+            )
+            pairs = props.strip("[]").lower().split(", ")
+            opts = dict(kv.partition("=")[::2] for kv in pairs)
+            if opts.get("partitionoverwritemode") != "dynamic":
+                raise ValueError(
+                    f"{name} lacks the dynamic partition overwrite option, so"
+                    " an overwrite could erase partitions its batch does not"
+                    f" touch; run ALTER TABLE {name} SET SERDEPROPERTIES"
+                    " ('partitionOverwriteMode'='dynamic') or recreate it"
+                )
+        self._overwrite_checked = True
+
+    def _drop_partitions(self, name: str, specs: list[Row]) -> None:
+        """Delete each partition of ``name`` (a Row of its values): directory
+        first, since these external tables keep their files on DROP
+        PARTITION and a reattach would recover them; then the DDL. A crash
+        between the two leaves no rows to recover."""
+        import shutil
+
+        for spec in specs:
+            clause = ", ".join(
+                f"`{c}` = {_part_lit(v)}" for c, v in spec.asDict().items()
+            )
+            desc = self.spark.sql(
+                f"DESCRIBE TABLE EXTENDED {name} PARTITION ({clause})"
+            ).collect()
+            # the partition's own Location row comes before the table's
+            loc = next(r.data_type for r in desc if r.col_name == "Location")
+            shutil.rmtree(loc.removeprefix("file:"), ignore_errors=True)
+            self.spark.sql(f"ALTER TABLE {name} DROP IF EXISTS PARTITION ({clause})")
 
     def ensure_table(self, like: DataFrame) -> None:
         """Create-if-not-exists with identity partitioning
         (IcebergTableManager.java:75-90; under an Iceberg catalog the DDL
         carries the format-v2 + merge-on-read TBLPROPERTIES directly)."""
+        self._require_dynamic_overwrite()
         if not self.spark.catalog.tableExists(self.table):
             if self.iceberg:
                 self.spark.sql(self.iceberg_create_sql(like))
@@ -335,10 +363,9 @@ class CatalogSink:
         # the foreachBatch replay re-run the epoch, and an append would
         # then double every row of the epoch's snapshots. Overwriting the
         # same partitions is idempotent under replay.
-        with self._overwrite_mode("dynamic"):
-            snap.select(*cols).write.format("parquet").mode(
-                "overwrite"
-            ).insertInto(self.history, overwrite=True)
+        snap.select(*cols).write.format("parquet").mode("overwrite").insertInto(
+            self.history, overwrite=True
+        )
 
     def read_as_of(self, epoch: int) -> DataFrame:
         """The table's state as of commit ``epoch`` (inclusive) — Iceberg's
@@ -418,30 +445,24 @@ class CatalogSink:
         drop snapshots older than the trailing window EXCEPT each
         partition's newest one (dropping that would lose the partition
         from every reconstruction, current included — the reason Iceberg
-        expiry never removes files referenced by the current snapshot)."""
+        expiry never removes files referenced by the current snapshot).
+        Each snapshot is one ``(__epoch, partition…)`` history partition, so
+        an expired one is dropped by DDL and no kept snapshot is rewritten."""
         from pyspark.sql import Window as W
 
         hi = self.last_epoch()
         parts = list(self.cfg.partition_fields)
         w = W.partitionBy(*parts) if parts else W.partitionBy(F.lit(1))
-        h = self.spark.table(self.history)
-        keep = (
-            h.withColumn("__max_e", F.max("__epoch").over(w))
+        snaps = self.spark.table(self.history).select("__epoch", *parts).distinct()
+        expired = (
+            snaps.withColumn("__max_e", F.max("__epoch").over(w))
             .filter(
-                (F.col("__epoch") > hi - keep_last)
-                | (F.col("__epoch") == F.col("__max_e"))
+                (F.col("__epoch") <= hi - keep_last)
+                & (F.col("__epoch") != F.col("__max_e"))
             )
             .drop("__max_e")
         )
-        cols = self.spark.table(self.history).columns
-        materialized = keep.select(*cols).localCheckpoint(eager=True)
-        # static overwrite: expired epochs' partition directories must GO;
-        # dynamic mode would leave them in place because no kept row lands
-        # in them.
-        with self._overwrite_mode("static"):
-            materialized.write.format("parquet").mode("overwrite").insertInto(
-                self.history, overwrite=True
-            )
+        self._drop_partitions(self.history, expired.collect())
 
     def purge_keys(self, keys: DataFrame) -> None:
         """GDPR-style hard delete: remove every row matching ``keys`` (on
@@ -489,6 +510,7 @@ class CatalogSink:
                 f"SELECT 1 FROM __purge_keys p WHERE {on})"
             )
             return
+        self._require_dynamic_overwrite()
         parts = list(self.cfg.partition_fields)
         kset = keys.select(*kcols).distinct().localCheckpoint(eager=True)
         targets = [(self.table, parts)]
@@ -510,31 +532,10 @@ class CatalogSink:
                 # there, so the dynamic overwrite skips them — drop by DDL
                 before = scoped.select(*pcols).distinct()
                 after = materialized.select(*pcols).distinct()
-
-                def _part_lit(val):
-                    # always a quoted, quote-escaped string literal: the
-                    # partition spec parser casts to the partition type, so
-                    # dates/ints round-trip; naked interpolation broke on
-                    # dates, quotes, and NULLs
-                    if val is None:
-                        raise ValueError(
-                            "purge_keys: NULL partition value cannot be "
-                            "dropped via partition spec"
-                        )
-                    return "'" + str(val).replace("'", "''") + "'"
-
-                for r in before.exceptAll(after).collect():
-                    spec = ", ".join(f"`{c}` = {_part_lit(r[c])}" for c in pcols)
-                    self.spark.sql(
-                        f"ALTER TABLE {name} DROP IF EXISTS PARTITION ({spec})"
-                    )
-            # dynamic mode scoped HERE, not inherited from the session: a
-            # static overwrite at this point would erase every partition
-            # that contained no purge key.
-            with self._overwrite_mode("dynamic"):
-                materialized.write.format("parquet").mode("overwrite").insertInto(
-                    name, overwrite=True
-                )
+                self._drop_partitions(name, before.exceptAll(after).collect())
+            materialized.write.format("parquet").mode("overwrite").insertInto(
+                name, overwrite=True
+            )
 
     # -- exactly-once ledger ------------------------------------------------
 
@@ -650,12 +651,11 @@ class CatalogSink:
         self._aligned(batch).write.format("parquet").mode("append").insertInto(self.table)
 
     def _overwrite(self, batch: DataFrame) -> DataFrame:
-        # dynamic mode: only partitions present in `batch` are replaced —
-        # the batch IS the touched partitions' post-state
-        with self._overwrite_mode("dynamic"):
-            self._aligned(batch).write.format("parquet").mode(
-                "overwrite"
-            ).insertInto(self.table)
+        # dynamic (a table option): only partitions present in `batch` are
+        # replaced — the batch IS the touched partitions' post-state
+        self._aligned(batch).write.format("parquet").mode("overwrite").insertInto(
+            self.table
+        )
         return batch
 
     def _upsert(self, batch: DataFrame, held: list[DataFrame]) -> DataFrame:
@@ -700,14 +700,12 @@ class CatalogSink:
             # the caller releases it once the snapshot has read it
             merged = merged.localCheckpoint(eager=True)
             held.append(merged)
-        with self._overwrite_mode("dynamic"):
-            self._aligned(merged).write.format("parquet").mode(
-                "overwrite"
-            ).insertInto(self.table)
+        self._aligned(merged).write.format("parquet").mode("overwrite").insertInto(
+            self.table
+        )
         # the checkpointed merge is exactly the touched partitions'
         # post-state — hand it to the snapshot path to skip the read-back
         return merged
-
 
     # -- maintenance (Iceberg rewrite_data_files / expire_snapshots parity) --
 
@@ -738,13 +736,13 @@ class CatalogSink:
         if self.iceberg:
             self.spark.sql(self.iceberg_compact_sql())
             return -1
+        self._require_dynamic_overwrite()
         parts = list(self.cfg.partition_fields)
         current = self.read()
         compacted = current.repartition(*parts) if parts else current.coalesce(1)
-        with self._overwrite_mode("dynamic"):
-            self._aligned(compacted.localCheckpoint(eager=True)).write.format(
-                "parquet"
-            ).mode("overwrite").insertInto(self.table)
+        self._aligned(compacted.localCheckpoint(eager=True)).write.format(
+            "parquet"
+        ).mode("overwrite").insertInto(self.table)
         return len(self._data_files())
 
     def _data_files(self) -> list[str]:

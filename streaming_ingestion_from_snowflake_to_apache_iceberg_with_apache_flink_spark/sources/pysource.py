@@ -96,6 +96,29 @@ def _us_timestamps(table):
     return table.cast(pa.schema(fields), safe=False)
 
 
+def _sorted_shard(path: str, shard_column: str, sort_column: str, columns, value):
+    """One shard's rows in sort order, projected to ``columns``: the shard
+    predicate and the column pruning are pushed into the parquet scan
+    (row-group pruning), then the shard is sorted in memory.
+
+    Memory bound: ONE SHARD's projected columns live in the executor that
+    reads it (the sort needs the full shard; pages bound what is EMITTED,
+    not what is held) — the same per-shard working-set bound as the
+    reference's per-key process function. A skewed mega-shard beyond
+    executor memory needs the JDBC binding, where ORDER BY + LIMIT/OFFSET
+    push the sort to the database (sources/jdbc.py), or a sub-shard key."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    shard = pq.read_table(
+        path,
+        columns=list(dict.fromkeys([*columns, sort_column])),
+        filters=[(shard_column, "=", value)],
+    )
+    order = pc.sort_indices(shard, sort_keys=[(sort_column, "ascending")])
+    return _us_timestamps(shard.take(order).select(columns))
+
+
 def _shard_value_counts(path: str, shard_column: str) -> dict:
     """The O1 poll, O(dimension) in DRIVER memory: stream the shard column
     through ``pyarrow.dataset`` batches, folding each batch's value counts
@@ -147,30 +170,10 @@ class ShardedParquetReader(DataSourceReader):
         ]
 
     def read(self, partition):
-        # Memory bound: ONE SHARD's projected columns live in this
-        # executor while it pages (the sort needs the full shard; pages
-        # bound what is EMITTED, not what is held) — the same per-shard
-        # working-set bound as the reference's per-key process function.
-        # Column pruning is pushed into the scan (columns=), so the bound
-        # is projected-shard-sized, never full-row-width; a skewed
-        # mega-shard beyond executor memory needs the JDBC binding, where
-        # ORDER BY + LIMIT/OFFSET push the sort to the database
-        # (sources/jdbc.py), or a sub-shard key.
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        cols = list(
-            dict.fromkeys([*self.columns, self.sort_column])
+        shard = _sorted_shard(
+            self.path, self.shard_column, self.sort_column, self.columns,
+            partition.value,
         )
-        shard = pq.read_table(
-            self.path,
-            columns=cols,
-            filters=[(self.shard_column, "=", partition.value)],
-        )
-        order = pc.sort_indices(
-            shard, sort_keys=[(self.sort_column, "ascending")]
-        )
-        shard = _us_timestamps(shard.take(order).select(self.columns))
         offset, n = 0, shard.num_rows
         while offset < n:  # the O6 LIMIT/OFFSET page loop
             # yield Arrow RecordBatches, not Python tuples: the engine
@@ -302,29 +305,10 @@ class ShardedParquetStreamReader(DataSourceStreamReader):
     def read(self, partition):
         if partition.value is None:
             return
-        # Same per-shard executor memory bound as the batch reader above:
-        # the sorted PROJECTED shard is held while its [start, end) slice
-        # is emitted (columns= prunes at the scan). See the batch
-        # reader's note for the mega-shard escape hatches.
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        cols = list(
-            dict.fromkeys([*self.columns, self.sort_column])
-        )
-        shard = pq.read_table(
-            self.path,
-            columns=cols,
-            filters=[(self.shard_column, "=", partition.value)],
-        )
-        order = pc.sort_indices(
-            shard, sort_keys=[(self.sort_column, "ascending")]
-        )
-        page = _us_timestamps(
-            shard.take(order)
-            .select(self.columns)
-            .slice(partition.start, partition.end - partition.start)
-        )
+        page = _sorted_shard(
+            self.path, self.shard_column, self.sort_column, self.columns,
+            partition.value,
+        ).slice(partition.start, partition.end - partition.start)
         # Arrow RecordBatches straight to the JVM (same fast path as the
         # batch reader above)
         yield from page.to_batches()

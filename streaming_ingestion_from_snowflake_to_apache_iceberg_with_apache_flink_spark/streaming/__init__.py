@@ -129,20 +129,6 @@ def scoped_confs(spark, confs: dict):
                 spark.conf.set(k, old)
 
 
-@contextmanager
-def scoped_state_partitions(spark, n: int | None):
-    """Scope ``spark.sql.shuffle.partitions`` (which doubles as the
-    streaming STATE partition count, frozen into the checkpoint at first
-    query start) around a ``writeStream.start()`` — see
-    ``session.stream_state_partitions`` for the sizing rationale.  ``None``
-    inherits the session value untouched."""
-    if n is None:
-        yield
-        return
-    with scoped_confs(spark, {_PARTS_KEY: n}):
-        yield
-
-
 #: Per-drain runtime telemetry, keyed by memory-sink query name and
 #: overwritten on each drain: micro-batch count, input rows, and the
 #: state-store commit shape of the LAST drain through

@@ -124,12 +124,22 @@ class SnowflakeLikeIngestor:
         ``dead_letter_path`` set, source values that fail their declared
         cast are additionally recorded as (row_key, field, raw) parquet
         rows (schema.cast_deadletter) instead of silently nulling — the
-        job survives, nothing is lost.
+        job survives, nothing is lost. The row key is the first of
+        ``sink.upsert_fields``, so that pair needs the key set.
         """
         if mode not in ("unseen", "offset"):
             raise ValueError(f"unknown ingest mode {mode!r}")
         if mode == "unseen" and not cfg.sink.upsert_fields:
             raise ValueError("'unseen' mode needs sink.upsert_fields as the key set")
+        if (
+            dead_letter_path is not None
+            and target_schema is not None
+            and not cfg.sink.upsert_fields
+        ):
+            raise ValueError(
+                "dead letters are keyed by the first of sink.upsert_fields;"
+                " set upsert_fields or drop dead_letter_path"
+            )
         self.spark = spark
         self.cfg = cfg
         self.mode = mode

@@ -297,10 +297,15 @@ def test_cycle_releases_its_checkpoints(spark, staging, tmp_path):
         assert not leftover, f"cycle {ing._cycle} left {sorted(leftover)} persisted"
 
 
-def test_ingest_growing_source_and_new_shards(spark, staging, tmp_path):
+@pytest.mark.parametrize("mode", ["unseen", "offset"])
+def test_ingest_growing_source_and_new_shards(spark, staging, tmp_path, mode):
+    """A shard value first seen mid-stream is discovered and drained from
+    its first row; in ``offset`` mode it starts at offset 0 (O4)."""
     path, first, rest, orders = staging
     cfg = _cfg(_uniq("t_grow"))
-    ing = SnowflakeLikeIngestor(spark, cfg, path, str(tmp_path / "state"), "o_orderkey")
+    ing = SnowflakeLikeIngestor(
+        spark, cfg, path, str(tmp_path / "state"), "o_orderkey", mode=mode
+    )
     ing.run_until_drained()
 
     # second wave arrives, including a brand-new shard value
@@ -310,6 +315,12 @@ def test_ingest_growing_source_and_new_shards(spark, staging, tmp_path):
             F.col("o_orderpriority")
         ),
     )
+    if mode == "offset":
+        # offset mode's precondition: a shard grows only past its last
+        # sorted row (SURVEY §2.2), so the second wave sorts after the first
+        extra = extra.withColumn(
+            "o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 100 YEARS")
+        )
     extra.write.mode("append").parquet(path)
     stats = ing.run_until_drained()
     assert any(s.new_shards > 0 for s in stats)
@@ -400,6 +411,35 @@ def test_schema_drift_bad_value_dead_letters(spark, tmp_path):
     rows = [(r.row_key, r.field, r.raw) for r in dead.collect()]
     assert ("2", "price", "oops") in rows
     assert len([r for r in rows if r[0] == "2"]) == 1
+
+
+def test_dead_letter_without_key_fields_rejected_at_construction(spark, tmp_path):
+    """Dead letters are keyed by the first upsert field. An append or
+    overwrite sink may leave ``upsert_fields`` empty, so the ingestor must
+    refuse a dead-letter path there when it is built, not fail in its
+    first data cycle after the page is checkpointed."""
+    import pyspark.sql.types as T
+
+    target = T.StructType(
+        [T.StructField("k", T.StringType()), T.StructField("shard", T.StringType())]
+    )
+    cfg = PipelineConfig(
+        source=SnowflakeSourceConfig(
+            table="dl", shard_column="shard", sort_column="k", query_size=10
+        ),
+        sink=IcebergSinkConfig(
+            db="default",
+            table_name=_uniq("t_dl_nokey"),
+            partition_fields=("shard",),
+            operation="append",
+        ),
+    )
+    with pytest.raises(ValueError, match="upsert_fields"):
+        SnowflakeLikeIngestor(
+            spark, cfg, str(tmp_path / "src"), str(tmp_path / "state"), "k",
+            mode="offset", target_schema=target,
+            dead_letter_path=str(tmp_path / "dead_letter"),
+        )
 
 
 def test_upsert_writes_one_file_per_partition(spark, staging, tmp_path):
@@ -836,12 +876,39 @@ def test_snapshot_time_travel_reconstructs_each_epoch(spark):
     assert all(p == "1-URGENT" for _, p in states[1])
     # expiry: drop everything but the trailing 1 commit; current state
     # stays reconstructible (each partition keeps its newest snapshot)
+    files_before = set(_history_files(sink))
     sink.expire_snapshots(keep_last=1)
+    pairs = {
+        tuple(r)
+        for r in spark.table(sink.history)
+        .select("__epoch", "o_orderpriority").distinct().collect()
+    }
+    assert pairs == {(3, "1-URGENT"), (2, "5-LOW")}
+    # the kept snapshots were not rewritten
+    assert set(_history_files(sink)) <= files_before
     got = {
         tuple(r)
         for r in sink.read_as_of(3).select("o_orderkey", "o_orderpriority").collect()
     }
     assert got == states[3]
+    # as of epoch 2 only 5-LOW survives: 1-URGENT's epoch-1 snapshot expired
+    got = {
+        tuple(r)
+        for r in sink.read_as_of(2).select("o_orderkey", "o_orderpriority").collect()
+    }
+    assert got == {r for r in states[2] if r[1] == "5-LOW"}
+
+
+def _history_files(sink) -> list[str]:
+    import glob
+    import os
+
+    loc = sink._managed_location(sink.history.split(".")[-1])
+    return [
+        p
+        for p in glob.glob(os.path.join(loc, "**", "*"), recursive=True)
+        if os.path.isfile(p) and not os.path.basename(p).startswith((".", "_"))
+    ]
 
 
 def test_snapshot_replay_is_idempotent(spark):
@@ -1174,41 +1241,164 @@ def test_iceberg_commit_discipline_stub_catalog(spark):
         spark.sql(f"DROP TABLE IF EXISTS default.{table}__commits")
 
 
-def test_overwrite_mode_scoping_is_thread_atomic(spark):
-    """Two threads scoping different partitionOverwriteMode values through
-    the same session must never observe each other's mode inside their
-    scope, and the session conf is restored afterward — the data-loss
-    interleave _overwrite_mode's lock exists to prevent."""
-    import threading
-
-    table = _uniq("ovw_lock")
-    cfg = _cfg(table).sink
-    sink = CatalogSink(spark, cfg)
+def test_sink_overwrites_ignore_a_static_session_mode(spark, monkeypatch):
+    """The overwrite mode is a table option, not session state. With the
+    session's partitionOverwriteMode forced to 'static' (any foreign
+    thread or session sharing it can leave it so), each overwriting sink
+    operation keeps every partition it did not target, and the sink never
+    sets a session conf."""
     key = "spark.sql.sources.partitionOverwriteMode"
-    before = spark.conf.get(key, "static")
-    seen, errors = [], []
+    prev = spark.conf.get(key, "static")
+    pcol = F.col("o_orderpriority")
+    orders = load_table(spark, SF, "orders").select(
+        "o_orderkey", "o_orderpriority", "o_orderdate", "o_totalprice"
+    )
+    urgent = orders.filter(pcol == "1-URGENT")
+    up = CatalogSink(
+        spark, _cfg(_uniq("t_hostile")).sink, version_column="o_orderdate",
+        snapshots=True,
+    )
+    ow = CatalogSink(
+        spark,
+        IcebergSinkConfig(
+            db="default", table_name=_uniq("t_hostile_ow"),
+            partition_fields=("o_orderpriority",), operation="overwrite",
+        ),
+    )
 
-    def worker(mode):
-        try:
-            for _ in range(10):
-                with sink._overwrite_mode(mode):
-                    observed = spark.conf.get(key)
-                    if observed != mode:
-                        seen.append((mode, observed))
-        except Exception as e:  # pragma: no cover - diagnostic
-            errors.append(e)
+    def rows(df, where=~(pcol == "1-URGENT")):
+        cols = [c for c in ("__epoch", "o_orderkey", "o_orderpriority",
+                            "o_totalprice") if c in df.columns]
+        return sorted(tuple(r) for r in df.filter(where).select(*cols).collect())
 
-    threads = [
-        threading.Thread(target=worker, args=(m,))
-        for m in ("dynamic", "static", "dynamic", "static")
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errors
-    assert not seen, f"mode leaked across scopes: {seen[:3]}"
-    assert spark.conf.get(key, "static") == before
+    calls = []
+    real_set = spark.conf.set
+    spark.conf.set(key, "static")
+    monkeypatch.setattr(
+        spark.conf, "set", lambda *a: (calls.append(a), real_set(*a))[1]
+    )
+    try:
+        up.write_batch(orders, 1)
+        ow.write_batch(orders, 1)
+        live, hist = rows(up.read()), rows(spark.table(up.history))
+        ow_live = rows(ow.read())
+        assert len(live) == orders.filter(pcol != "1-URGENT").count() > 0
+
+        # upsert + snapshot commit touching only 1-URGENT
+        bump = urgent.limit(20).withColumn("o_totalprice", F.lit(1.0))
+        assert up.write_batch(bump, 2) == "upsert"
+        assert rows(up.read()) == live
+        assert rows(spark.table(up.history)) == hist
+        # overwrite commit touching only 1-URGENT
+        assert ow.write_batch(bump, 2) == "overwrite"
+        assert rows(ow.read()) == ow_live
+        assert ow.read().filter(pcol == "1-URGENT").count() == 20
+        # compaction rewrites every partition: nothing may be lost
+        whole = rows(up.read(), F.lit(True))
+        up.compact()
+        assert rows(up.read(), F.lit(True)) == whole
+        # purge of one 1-URGENT key, live table and history
+        victim = bump.limit(1).select("o_orderkey", "o_orderpriority")
+        up.purge_keys(victim)
+        assert rows(up.read()) == live
+        assert rows(spark.table(up.history)) == hist
+        assert up.read().count() == len(whole) - 1
+        # expiry drops only 1-URGENT's epoch-1 snapshot
+        up.expire_snapshots(keep_last=1)
+        assert rows(spark.table(up.history)) == hist
+        kept = rows(spark.table(up.history), pcol == "1-URGENT")
+        assert {r[0] for r in kept} == {2}
+        assert [r[1:] for r in kept] == rows(up.read(), pcol == "1-URGENT")
+
+        assert calls == [], f"the sink set session confs: {calls}"
+        assert spark.conf.get(key) == "static"
+    finally:
+        real_set(key, prev)
+        for t in (up.table, up.commits, up.history, ow.table, ow.commits):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_partitioned_table_without_dynamic_option_fails_closed(spark):
+    """A partitioned target created outside the sink without the dynamic
+    overwrite option (older code, a user's own DDL) would take static
+    overwrites: the first write_batch raises before touching it. Once the
+    option is set, a new sink overwrites only the batch's partitions."""
+    t = _uniq("t_foreign")
+    orders = load_table(spark, SF, "orders").select(
+        "o_orderkey", "o_orderdate", "o_totalprice", "o_orderpriority"
+    )
+    orders.write.partitionBy("o_orderpriority").saveAsTable(f"default.{t}")
+    cfg = IcebergSinkConfig(
+        db="default", table_name=t, partition_fields=("o_orderpriority",),
+        operation="overwrite",
+    )
+    urgent = F.col("o_orderpriority") == "1-URGENT"
+
+    def snapshot(where=F.lit(True)):
+        rows = spark.table(f"default.{t}").filter(where).collect()
+        return sorted(tuple(r) for r in rows)
+
+    before = snapshot()
+    batch = orders.filter(urgent).limit(5)
+    sink = CatalogSink(spark, cfg)
+    try:
+        with pytest.raises(ValueError, match="dynamic partition overwrite"):
+            sink.write_batch(batch, 1)
+        assert snapshot() == before
+        assert not sink._committed(1)
+
+        spark.sql(
+            f"ALTER TABLE default.{t} SET SERDEPROPERTIES "
+            "('partitionOverwriteMode'='dynamic')"
+        )
+        assert CatalogSink(spark, cfg).write_batch(batch, 1) == "overwrite"
+        assert snapshot(~urgent) == [r for r in before if r[-1] != "1-URGENT"]
+        assert len(snapshot(urgent)) == 5
+    finally:
+        for name in (f"default.{t}", sink.commits):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_dropped_partitions_stay_gone_after_reattach(spark):
+    """The fallback tables are external, so Spark's DROP PARTITION keeps
+    their files, and a restarted driver's reattach recovers every
+    partition directory it finds. A partition emptied by purge_keys and a
+    snapshot removed by expire_snapshots must not come back that way."""
+    cfg = _cfg(_uniq("t_reattach")).sink
+    sink = CatalogSink(spark, cfg, version_column="o_orderdate", snapshots=True)
+    orders = load_table(spark, SF, "orders")
+    pcol = F.col("o_orderpriority")
+
+    def state(s):
+        live = {
+            tuple(r) for r in s.read().select("o_orderkey", "o_orderpriority").collect()
+        }
+        hist = {
+            tuple(r)
+            for r in spark.table(s.history)
+            .select("__epoch", "o_orderpriority").distinct().collect()
+        }
+        return live, hist
+
+    try:
+        sink.write_batch(orders, 1)
+        sink.write_batch(orders.filter(pcol == "1-URGENT").limit(10), 2)
+        sink.expire_snapshots(keep_last=1)  # expires 1-URGENT's epoch 1
+        sink.purge_keys(
+            orders.filter(pcol == "5-LOW").select("o_orderkey", "o_orderpriority")
+        )
+        live, hist = state(sink)
+        assert (1, "1-URGENT") not in hist and (1, "5-LOW") not in hist
+        assert all(p != "5-LOW" for _, p in live)
+
+        for t in (sink.table, sink.commits, sink.history):
+            spark.sql(f"DROP TABLE {t}")  # external: the files stay
+        again = CatalogSink(spark, cfg, version_column="o_orderdate", snapshots=True)
+        again.ensure_table(orders)
+        assert state(again) == (live, hist)
+    finally:
+        for t in (sink.table, sink.commits, sink.history):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_diff_versions_classifies_changes(spark, tmp_path):
