@@ -205,6 +205,32 @@ def ts_ms(col: str | Column) -> Column:
     return (F.unix_micros(c) / F.lit(1000)).cast("long")
 
 
+def _cast_checks(target: T.StructType, key: str) -> list[tuple[str, str]]:
+    """``(field, predicate)`` for every field whose cast can fail: the
+    predicate holds when the source value is non-null but its ``try_cast``
+    to the target type is null."""
+    validate_target_schema(target)
+    return [
+        (
+            f.name,
+            f"{f.name} IS NOT NULL "
+            f"AND try_cast({f.name} AS {f.dataType.simpleString()}) IS NULL",
+        )
+        for f in target.fields
+        # strings always cast; the key must be trustworthy
+        if not isinstance(f.dataType, T.StringType) and f.name != key
+    ]
+
+
+def cast_failures(target: T.StructType, key: str) -> Column:
+    """Per row, the number of fields that fail their declared cast — the
+    number of rows ``cast_deadletter`` emits for it. Summed in an
+    aggregate, it tells whether a dead-letter write has anything to write
+    without running that write."""
+    terms = [f"CAST({pred} AS INT)" for _, pred in _cast_checks(target, key)]
+    return F.expr(" + ".join(terms) if terms else "0")
+
+
 def cast_deadletter(df: DataFrame, target: T.StructType, key: str) -> DataFrame:
     """The whitelist's throw-branch (SnowflakeToRowDataMapFunction.java:82-83)
     as DATA instead of a job-killing exception: rows whose source value is
@@ -216,19 +242,11 @@ def cast_deadletter(df: DataFrame, target: T.StructType, key: str) -> DataFrame:
     (an array of per-field CASEs) + a generate — no shuffle, no Python,
     and the happy path pays only the try_cast it already needed.
     """
-    validate_target_schema(target)
-    checks = []
-    for f in target.fields:
-        if isinstance(f.dataType, T.StringType) or f.name == key:
-            continue  # strings always cast; the key must be trustworthy
-        t = f.dataType.simpleString()
-        checks.append(
-            f"CASE WHEN {f.name} IS NOT NULL "
-            f"AND try_cast({f.name} AS {t}) IS NULL "
-            f"THEN named_struct('field', '{f.name}', "
-            f"'raw', cast({f.name} AS string)) END"
-        )
-    arr = ", ".join(checks)
+    arr = ", ".join(
+        f"CASE WHEN {pred} THEN named_struct('field', '{name}', "
+        f"'raw', cast({name} AS string)) END"
+        for name, pred in _cast_checks(target, key)
+    )
     return df.selectExpr(
         f"{key} AS row_key",
         f"filter(array({arr}), x -> x IS NOT NULL) AS __bad",

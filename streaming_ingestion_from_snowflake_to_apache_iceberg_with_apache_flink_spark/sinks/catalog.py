@@ -35,6 +35,8 @@ of Flink's checkpoint barrier — SURVEY.md §3.4).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,6 +51,45 @@ def release_checkpoint(df: DataFrame) -> None:
     blocks. Call it only once nothing will read ``df`` again: a
     checkpointed plan cannot recompute its blocks."""
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _hidden(name: str) -> bool:
+    """Spark's rule for the names its file index never reads (``_SUCCESS``,
+    ``.crc`` files, ``_temporary``); partition directories and parquet
+    summary files are read."""
+    if name.startswith("."):
+        return True
+    return (
+        name.startswith("_")
+        and "=" not in name
+        and not name.startswith(("_metadata", "_common_metadata"))
+    )
+
+
+def file_signature(path: str) -> tuple | None:
+    """``(path, length, mtime_ns)`` of every file Spark would read under
+    ``path``, sorted: one driver-side walk, no Spark job. None when
+    ``path`` names no local file or directory (a remote URI, a glob)."""
+    root = path.removeprefix("file:")
+    if "://" in root or any(c in root for c in "*?[{") or not os.path.exists(root):
+        return None
+    if os.path.isfile(root):
+        walk = [(os.path.dirname(root), [], [os.path.basename(root)])]
+    else:
+        walk = os.walk(root)
+    out = []
+    for d, dirs, files in walk:
+        dirs[:] = [n for n in dirs if not _hidden(n)]
+        for n in files:
+            if _hidden(n):
+                continue
+            p = os.path.join(d, n)
+            try:
+                st = os.stat(p)
+            except FileNotFoundError:  # removed mid-walk: nothing to read
+                continue
+            out.append((p, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
 
 
 def _part_lit(val) -> str:
@@ -231,8 +272,6 @@ class CatalogSink:
         partition recovery restores state — a driver restart resumes
         instead of crashing (the reference gets this from Glue being a
         persistent catalog, IcebergTableManager.java:66-73)."""
-        import os
-
         loc = self._managed_location(name.split(".")[-1])
         if part_override is not None:
             parts = list(part_override)
@@ -343,9 +382,10 @@ class CatalogSink:
         (their reconstruction reuses their last snapshot).
 
         ``post_state`` short-circuits the target read-back when the write
-        path already materialized the touched partitions' new rows (the
-        upsert's checkpointed merge, the overwrite's batch) — the
-        snapshot then costs one write, zero extra table scans."""
+        path holds the touched partitions' new rows in a form that does not
+        read the table (a bootstrap upsert's merge, an unpartitioned
+        upsert's checkpoint, the overwrite's batch) — the snapshot then
+        costs one write, zero extra table scans."""
         parts = list(self.cfg.partition_fields)
         if post_state is not None:
             state = post_state
@@ -557,7 +597,6 @@ class CatalogSink:
     def _ledger_epochs(self) -> set[int]:
         if getattr(self, "_epochs_cache", None) is None:
             import glob
-            import os
 
             import pyarrow.parquet as pq
 
@@ -585,7 +624,6 @@ class CatalogSink:
         return int(epoch) in self._ledger_epochs()
 
     def _record(self, epoch: int) -> None:
-        import os
         import uuid
 
         import pyarrow as pa
@@ -658,54 +696,63 @@ class CatalogSink:
         )
         return batch
 
-    def _upsert(self, batch: DataFrame, held: list[DataFrame]) -> DataFrame:
+    def _upsert_merge(self, batch: DataFrame, target_empty: bool) -> DataFrame:
+        """The post-state of every partition the batch touches, in the
+        table's column order: the batch unioned with those partitions'
+        current rows, last writer wins per equality key. Against an empty
+        target (first commit, initial load) it is the batch's own dedup."""
         keys = list(self.cfg.upsert_fields)
         version = self.version_column or keys[-1]
         parts = list(self.cfg.partition_fields)
-        current = self.read()
-        # Bootstrap fast path: against an EMPTY target (first commit /
-        # initial load) the merge degenerates to batch-internal dedup —
-        # skip the target union AND the localCheckpoint barrier (which
-        # exists only because the merged plan otherwise self-joins the
-        # table being overwritten). Saves a full batch materialization
-        # on exactly the commit that carries the most rows.
-        # Emptiness comes from the LEDGER, not a table scan (isEmpty is a
-        # distributed job; the ledger read is cached driver metadata):
-        # under the single-writer contract no committed epochs ⇒ the only
-        # possible target rows are a crashed write of THIS epoch's batch,
-        # and the bootstrap write below dynamic-overwrites exactly those
-        # partitions — replay-idempotent either way.
-        target_empty = not self._ledger_epochs()
-        if parts and not target_empty:
-            # restrict the rewrite to partitions the batch touches: the
-            # MERGE ON <equality fields> target-side partition pruning
-            touched = batch.select(*parts).distinct()
-            current = current.join(F.broadcast(touched), on=parts, how="left_semi")
         src = batch.withColumn("__src", F.lit(1))
         if not target_empty:
+            current = self.read()
+            if parts:
+                # restrict the rewrite to partitions the batch touches: the
+                # MERGE ON <equality fields> target-side partition pruning
+                touched = batch.select(*parts).distinct()
+                current = current.join(F.broadcast(touched), on=parts, how="left_semi")
             src = current.withColumn("__src", F.lit(0)).unionByName(src)
-        merged = merge_upsert(src, keys, version, tiebreakers=["__src"]).drop(
-            "__src"
-        )
-        # Align writer tasks with table partitions: without this every
-        # shuffle partition writes a sliver of every touched partition
-        # (tasks × partitions small files per commit, and the unseen-mode
-        # anti-join re-reads the target each cycle). One file per touched
-        # partition per commit; for a partition too big for one task,
-        # add a bucketing term to the repartition key.
         if parts:
-            merged = merged.repartition(*parts)
+            # One exchange, on the partition fields. They are a subset of
+            # the equality keys (the config enforces it), so the per-key
+            # window below needs no second shuffle, and each touched
+            # partition lands in one writer task: one file per partition
+            # per commit, not a sliver from every shuffle task (for a
+            # partition too big for one task, add a bucketing term).
+            # Partition fields first in the window key, so its sort is also
+            # the writer's.
+            src = src.repartition(*parts)
+            keys = parts + [k for k in keys if k not in parts]
+        merged = merge_upsert(src, keys, version, tiebreakers=["__src"])
+        return self._aligned(merged.drop("__src"))
+
+    def _upsert(self, batch: DataFrame, held: list[DataFrame]) -> DataFrame | None:
+        """Copy-on-write MERGE of ``batch`` into the touched partitions in one
+        write job. Returns the touched partitions' post-state when it is
+        at hand without reading the table again, else None (the snapshot
+        then reads them back)."""
+        # Emptiness from the table's files, a driver-side listing: a table
+        # that holds rows without ledger epochs (made elsewhere, or its
+        # ledger lost) still merges, and a replay after a crashed bootstrap
+        # merges with that attempt's own rows — idempotent either way.
+        target_empty = not self._data_files()
+        merged = self._upsert_merge(batch, target_empty)
+        post: DataFrame | None = merged
         if not target_empty:
-            # self-join on the target table: materialize before overwriting;
-            # the caller releases it once the snapshot has read it
-            merged = merged.localCheckpoint(eager=True)
-            held.append(merged)
-        self._aligned(merged).write.format("parquet").mode("overwrite").insertInto(
-            self.table
-        )
-        # the checkpointed merge is exactly the touched partitions'
-        # post-state — hand it to the snapshot path to skip the read-back
-        return merged
+            if self.cfg.partition_fields:
+                # a dynamic partition overwrite stages its output and may
+                # read the table it replaces; the merge read it, so the
+                # snapshot must not evaluate the merge again
+                post = None
+            else:
+                # an unpartitioned overwrite may not read its own table
+                # (UNSUPPORTED_OVERWRITE.TABLE): materialize it first; the
+                # caller releases it once the snapshot has read it
+                merged = post = merged.localCheckpoint(eager=True)
+                held.append(merged)
+        merged.write.format("parquet").mode("overwrite").insertInto(self.table)
+        return post
 
     # -- maintenance (Iceberg rewrite_data_files / expire_snapshots parity) --
 
@@ -739,22 +786,25 @@ class CatalogSink:
         self._require_dynamic_overwrite()
         parts = list(self.cfg.partition_fields)
         current = self.read()
-        compacted = current.repartition(*parts) if parts else current.coalesce(1)
-        self._aligned(compacted.localCheckpoint(eager=True)).write.format(
-            "parquet"
-        ).mode("overwrite").insertInto(self.table)
+        if parts:
+            # a dynamic partition overwrite may read the table it replaces
+            self._aligned(current.repartition(*parts)).write.format("parquet").mode(
+                "overwrite"
+            ).insertInto(self.table)
+            return len(self._data_files())
+        # an unpartitioned one may not: materialize first
+        compacted = current.coalesce(1).localCheckpoint(eager=True)
+        try:
+            self._aligned(compacted).write.format("parquet").mode(
+                "overwrite"
+            ).insertInto(self.table)
+        finally:
+            release_checkpoint(compacted)
         return len(self._data_files())
 
     def _data_files(self) -> list[str]:
-        import glob
-        import os
-
-        loc = self._managed_location(self.cfg.table_name)
-        return [
-            p
-            for p in glob.glob(os.path.join(loc, "**", "*"), recursive=True)
-            if os.path.isfile(p) and not os.path.basename(p).startswith((".", "_"))
-        ]
+        sig = file_signature(self._managed_location(self.cfg.table_name))
+        return [p for p, _, _ in sig or ()]
 
     def expire_commits(self, keep_last: int = 100) -> None:
         """Ledger hygiene (Iceberg expire_snapshots parity): the epoch

@@ -7,28 +7,41 @@ values over JDBC → keyBy(shard) → per-key state {offset, timer} → paginate
 Spark-native re-expression (SURVEY.md §3.4): a micro-batch cycle engine.
 Each ``run_cycle``:
 
-1. **discover** — distinct shard values of the source (O1), collected
-   once to the driver; newcomers are bootstrapped at offset 0 (O4; the
-   reference re-emits everything and no-ops repeats, we diff the
-   collected set against the known offsets);
-2. **fetch** — ONE plan computes every shard's next page: rank rows per
+1. **fetch** — ONE plan computes every shard's next page: rank rows per
    shard with ``row_number`` over (sort, tiebreak) (deterministic fix of
-   the reference's bare LIMIT/OFFSET, SURVEY.md §2.2), broadcast-join the
-   per-shard offsets (a driver-built local relation), keep
-   ``offset < rn ≤ offset+size``. All shards fetch in parallel — the
-   reference's keyBy fan-out became a partition-parallel window, no
-   per-key loops, no driver iteration over shards. The page is
-   materialized ONCE (``localCheckpoint``): one ``groupBy(shard).count``
-   over it gives the row total and each shard's advance, so the rows
-   committed and the offsets advanced come from the same read of the
-   source (the reference's ``offset += rows_returned``);
-3. **cast** — the O9 whitelist projection and the dead-letter write, both
-   over the materialized page;
+   the reference's bare LIMIT/OFFSET, SURVEY.md §2.2) and keep
+   ``offset < rn ≤ offset+size``. The known offsets ride in the plan as a
+   literal map, ``coalesce(map(...)[shard], 0)``: a shard the map lacks
+   is new and starts at offset 0 (O1+O4), so discovery is no pass of its
+   own. The same window's ``lead`` marks whether a row follows each row in
+   its shard — the *peek* at the next page, without fetching it. All
+   shards fetch in parallel — the reference's keyBy fan-out became a
+   partition-parallel window, no per-key loops, no driver iteration over
+   shards;
+2. **materialize and count** — the page is materialized ONCE
+   (``localCheckpoint``), and that job also observes, from each shard's
+   last page row, the shard's advance and whether it holds more, plus the
+   page's failed-cast count (``Dataset.observe``: no count job). The rows
+   committed and the offsets advanced come from the same evaluation (the
+   reference's ``offset += rows_returned``);
+3. **cast** — the O9 whitelist projection over the materialized page; the
+   dead letters are written only when the count saw a failed cast;
 4. **commit** — stage the advanced offsets under the cycle's epoch, then
    the mode-dispatched sink write (O12) with an epoch ledger. The ledger
    record publishes data and offsets together: state only moves forward
    once data is durable, and data never commits without its offsets.
    The cycle then releases its page checkpoint.
+
+A poll that finds nothing runs nothing. The staging's file signature
+(path, length and modification time of every file, one driver-side
+listing) keys both the source schema, inferred once and reused while the
+signature holds, and, in offset mode, the *caught-up* state: after a cycle
+in which no shard had a row past its page, every row of that listing is
+committed, so the next cycle over the same signature returns at once
+without a Spark job or a py4j call — the Structured Streaming rule that a
+trigger with no new input plans nothing. A newly landed or rewritten file
+changes the signature and the next cycle reads again. A ``source_reader``
+has no listing and never skips.
 
 Offsets are driver metadata, one row per shard — the checkpointable
 analogue of the reference's ``ValueState<Integer>``
@@ -54,11 +67,11 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..sinks.catalog import CatalogSink, release_checkpoint
+from ..sinks.catalog import CatalogSink, file_signature, release_checkpoint
 
 
 @dataclass
@@ -77,6 +90,15 @@ def _offsets_table(offsets: dict[str, int]) -> pa.Table:
             "offset": pa.array(list(offsets.values()), pa.int64()),
         }
     )
+
+
+def _offset_of(shard: Column, offsets: dict[str, int]) -> Column:
+    """A shard's known offset as a literal-map lookup, 0 for a shard the
+    map lacks (a new one). A null shard gets no offset, so its rows never
+    pass the page filter, as they never matched the offsets before."""
+    known = [x for s, o in offsets.items() if s is not None for x in (F.lit(s), F.lit(o))]
+    off = F.coalesce(F.create_map(*known)[shard], F.lit(0)) if known else F.lit(0)
+    return F.when(shard.isNotNull(), off.cast("long"))
 
 
 class SnowflakeLikeIngestor:
@@ -158,6 +180,11 @@ class SnowflakeLikeIngestor:
         # resume the epoch counter past durable commits so a restarted
         # driver never reuses a ledgered epoch id
         self._cycle = self.sink.last_epoch()
+        # (staging file signature, schema inferred from those files)
+        self._schema: tuple | None = None
+        # (staging file signature, shards seen) once an offset-mode cycle
+        # committed every row of those files
+        self._idle: tuple | None = None
 
     # -- state (the ValueState analogue) ------------------------------------
 
@@ -205,16 +232,28 @@ class SnowflakeLikeIngestor:
 
     # -- one micro-batch cycle ---------------------------------------------
 
-    def _source(self) -> DataFrame:
+    def _listing(self) -> tuple | None:
+        if self.source_reader is not None:
+            return None
+        return file_signature(self.source_path)
+
+    def _source(self, listing: tuple | None = None) -> DataFrame:
+        """The staging read. ``listing`` is the staging's file signature:
+        the schema inferred from those files is reused while it holds."""
         if self.source_reader is not None:
             return self.source_reader()
+        reader = self.spark.read
+        if self._schema is not None and self._schema[0] == listing:
+            # the same files the schema came from: no inference job
+            return reader.schema(self._schema[1]).parquet(self.source_path)
         if self.target_schema is not None:
             # drift tolerance needs the union of file schemas, not the
             # footer of whichever file the reader samples first
-            return self.spark.read.option("mergeSchema", "true").parquet(
-                self.source_path
-            )
-        return self.spark.read.parquet(self.source_path)
+            reader = reader.option("mergeSchema", "true")
+        src = reader.parquet(self.source_path)
+        if listing is not None:
+            self._schema = (listing, src.schema)
+        return src
 
     def pending_unseen(self, src: DataFrame, shard_vals: list[str]) -> DataFrame:
         """Source rows whose equality keys are not yet in the target.
@@ -237,95 +276,120 @@ class SnowflakeLikeIngestor:
         )
         return src.join(tgt.select(*keys), keys, "left_anti")
 
-    def _cast(self, page: DataFrame, rows: int) -> DataFrame:
+    def _cast(self, batch: DataFrame, failed: int) -> DataFrame:
         """O9: cast projection against the declared contract — added source
         columns are dropped, declared columns are cast, failed casts are
         ledgered to the dead-letter path; without a declared schema the
-        staging is already typed and the cast is the identity."""
+        staging is already typed and the cast is the identity. ``failed``
+        is the batch's failed-cast count, observed by its checkpoint."""
         if self.target_schema is None:
-            return page
+            return batch
         from ..schema import cast_deadletter, cast_projection
 
-        if self.dead_letter_path is not None and rows:
+        if self.dead_letter_path is not None:
             # one directory per epoch, overwritten: a replay of an epoch
             # that crashed before its commit rewrites the same dead letters
             # instead of appending them again
-            key = list(self.cfg.sink.upsert_fields)[0]
-            cast_deadletter(page, self.target_schema, key).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(self.dead_letter_path, f"epoch={self._cycle}"))
+            out = os.path.join(self.dead_letter_path, f"epoch={self._cycle}")
+            if failed:
+                key = list(self.cfg.sink.upsert_fields)[0]
+                cast_deadletter(batch, self.target_schema, key).write.mode(
+                    "overwrite"
+                ).parquet(out)
+            else:
+                # nothing to record; drop what a crashed attempt left
+                shutil.rmtree(out.removeprefix("file:"), ignore_errors=True)
         # with a dead-letter ledger the main path survives bad values
         # (try_cast ⇒ null, the failure already recorded); without one,
         # keep the reference's fail-fast ANSI cast
         return cast_projection(
-            page, self.target_schema, lenient=self.dead_letter_path is not None
+            batch, self.target_schema, lenient=self.dead_letter_path is not None
+        )
+
+    @staticmethod
+    def _ranked(src: DataFrame, w, offset: Column) -> DataFrame:
+        """``src`` with each row's rank in its shard, whether a row follows
+        it there, and its shard's offset."""
+        return (
+            src.withColumn("__rn", F.row_number().over(w))
+            .withColumn("__more", F.lead(F.lit(1)).over(w).isNotNull())
+            .withColumn("__off", offset)
         )
 
     def run_cycle(self) -> CycleStats:
+        listing = self._listing()
+        if self._idle is not None and self._idle[0] == listing:
+            # caught up, and nothing landed since: plan and run nothing
+            self._cycle += 1
+            return CycleStats(self._cycle, self._idle[1], 0, 0, "caught-up")
+        self._idle = None
         cfg = self.cfg.source
-        src = self._source()
+        src = self._source(listing)
         shard_c = cfg.shard_column
         shard = F.col(shard_c).cast("string")
-
-        # O1+O4: discover shards, bootstrap newcomers at offset 0
-        shard_vals = [r[0] for r in src.select(shard).distinct().collect()]
-        if self.mode == "offset":
-            known = self.load_offsets()
-        elif self.spark.catalog.tableExists(self.sink.table):
-            # unseen mode: the target table is the state — known shards are
-            # the partition values already ingested
-            known = {r[0]: 0 for r in self.sink.read().select(shard).distinct().collect()}
-        else:
-            known = {}
-        n_new = len(set(shard_vals) - known.keys())
+        size = cfg.query_size
 
         # O6/O7: every shard's next page in one ranked plan
         w = Window.partitionBy(shard_c).orderBy(
             F.col(cfg.sort_column).asc(), F.col(self.tiebreaker).asc()
         )
         if self.mode == "offset":
-            # a local relation: the broadcast side ships driver data and
-            # scans nothing
-            offsets = self.spark.createDataFrame(
-                _offsets_table({s: known.get(s, 0) for s in shard_vals})
-            )
-            ranked = src.withColumn("__rn", F.row_number().over(w))
-            page = (
-                ranked.join(
-                    F.broadcast(offsets),
-                    ranked[shard_c].cast("string") == offsets["shard_value"],
-                )
-                .filter(
-                    (F.col("__rn") > F.col("offset"))
-                    & (F.col("__rn") <= F.col("offset") + cfg.query_size)
-                )
-                .drop("shard_value", "offset", "__rn")
-            )
+            # O1+O4 inside the page: a shard missing from the map is new
+            # and starts at 0, so no discovery pass reads the source
+            known = self.load_offsets()
+            ranked = self._ranked(src, w, _offset_of(shard, known))
         else:  # "unseen": page over rows whose equality keys aren't ingested
-            page = (
-                self.pending_unseen(src, shard_vals)
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= cfg.query_size)
-                .drop("__rn")
-            )
-        # the cycle's one read of the source: the count, the offset
-        # advance, the dead letters and the sink write all read these
-        # blocks, so what commits is exactly what advanced the offsets.
-        # Not cache(): the cache is keyed by plan, and a later cycle's
-        # identical plan over a changed staging would hit this page.
-        page = page.localCheckpoint(eager=True)
+            # the distinct shard set prunes the target side of the anti-join
+            shard_vals = [r[0] for r in src.select(shard).distinct().collect()]
+            if self.spark.catalog.tableExists(self.sink.table):
+                # the target table is the state — known shards are the
+                # partition values already ingested
+                known = {
+                    r[0]: 0 for r in self.sink.read().select(shard).distinct().collect()
+                }
+            else:
+                known = {}
+            ranked = self._ranked(self.pending_unseen(src, shard_vals), w, F.lit(0))
+        rn, off, more = F.col("__rn"), F.col("__off"), F.col("__more")
+        page = ranked.filter((rn > off) & (rn <= off + size))
+        # Each shard's last page row carries the shard's advance and whether
+        # a row follows it. The checkpoint's own job collects these (an
+        # observation, no count job), so the rows committed and the offsets
+        # advanced come from one evaluation.
+        last = (rn == off + size) | ~more
+        shards = F.struct(shard.alias("shard"), (rn - off).alias("n"), more.alias("more"))
+        observed = [F.collect_list(F.when(last, shards)).alias("shards")]
+        dead_letters = self.target_schema is not None and self.dead_letter_path is not None
+        if dead_letters:
+            from ..schema import cast_failures
+
+            key = list(self.cfg.sink.upsert_fields)[0]
+            observed.append(F.sum(cast_failures(self.target_schema, key)).alias("failed"))
+        obs = Observation()
+        # the cycle's one read of the source: the offset advance, the dead
+        # letters and the sink write all read these blocks, so what commits
+        # is exactly what advanced the offsets. Not cache(): the cache is
+        # keyed by plan, and a later cycle's identical plan over a changed
+        # staging would hit this page.
+        page = (
+            page.observe(obs, *observed)
+            .drop("__rn", "__off", "__more")
+            .localCheckpoint(eager=True)
+        )
         try:
-            ingested = {r[0]: r[1] for r in page.groupBy(shard).count().collect()}
+            metrics = obs.get
+            ingested = {r.shard: r.n for r in metrics["shards"]}
             rows = sum(ingested.values())
+            caught_up = not any(r.more for r in metrics["shards"])
             self._cycle += 1
-            batch = self._cast(page, rows)
+            batch = self._cast(page, metrics.get("failed") or 0)
             advance = rows > 0 and self.mode == "offset"
             # O7: stage the advanced offsets under this epoch; the commit
             # below makes them live (load_offsets)
             if advance:
                 self._stage_offsets(
                     self._cycle,
-                    {s: known.get(s, 0) + ingested.get(s, 0) for s in shard_vals},
+                    {**known, **{s: known.get(s, 0) + n for s, n in ingested.items()}},
                 )
 
             # O12: commit batch
@@ -334,7 +398,13 @@ class SnowflakeLikeIngestor:
             release_checkpoint(page)
         if advance:
             self._prune_offsets(live=self._cycle)
-        return CycleStats(self._cycle, len(shard_vals), n_new, rows, action)
+        seen = len(known.keys() | ingested.keys())
+        if caught_up and listing is not None and self.mode == "offset":
+            # every row this listing holds is committed. Not in unseen
+            # mode: its state is the target table, which other writes
+            # (a purge) can change while the staging holds still.
+            self._idle = (listing, seen)
+        return CycleStats(self._cycle, seen, len(ingested.keys() - known.keys()), rows, action)
 
     def run_until_drained(self, max_cycles: int = 100) -> list[CycleStats]:
         """Drain the source: cycles until a pass ingests nothing (the batch

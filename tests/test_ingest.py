@@ -248,32 +248,123 @@ def test_staging_change_mid_cycle_commits_what_advanced(spark, staging, tmp_path
     assert got.count() == got.select("o_orderkey").distinct().count() == n_source
 
 
+def _jobs(spark, fn):
+    """``(fn(), number of Spark jobs it ran)``."""
+    sc = spark.sparkContext
+    group = _uniq("jobs")
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_cycle_job_count_pin(spark, staging, tmp_path):
-    """One data cycle and one empty cycle in offset + upsert mode run at
-    most half the Spark jobs they ran on this fixture when every consumer
-    of the page re-ran its plan (26 and 15)."""
+    """One data cycle in offset + upsert mode runs at most 7 Spark jobs (26
+    when every consumer of the page re-ran its plan, 11 with a discovery
+    job and a count job of its own). The caught-up poll after it runs no
+    Spark job and makes no py4j call at all."""
     path, first, _, _ = staging
     ing = SnowflakeLikeIngestor(
         spark, _cfg(_uniq("t_jobs")), path, str(tmp_path / "state"),
         "o_orderkey", mode="offset",
     )
-    sc = spark.sparkContext
+    data, data_jobs = _jobs(spark, ing.run_cycle)
 
-    def counted(group: str):
-        sc.setJobGroup(group, group)
+    client = spark.sparkContext._gateway._gateway_client
+    real, calls = client.send_command, []
+
+    def poll():
+        client.send_command = lambda cmd, *a, **k: (calls.append(cmd), real(cmd, *a, **k))[1]
         try:
-            st = ing.run_cycle()
+            return ing.run_cycle()
         finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return st, len(sc.statusTracker().getJobIdsForGroup(group))
+            del client.send_command
 
-    data, data_jobs = counted(_uniq("data_cycle"))
-    empty, empty_jobs = counted(_uniq("empty_cycle"))
+    empty, empty_jobs = _jobs(spark, poll)
     assert data.rows_ingested == first.count() and empty.rows_ingested == 0
-    assert data_jobs <= 26 / 2, data_jobs
-    assert empty_jobs <= 15 / 2, empty_jobs
+    assert empty.action == "caught-up"
+    assert data_jobs <= 7, data_jobs
+    assert empty_jobs == 0, empty_jobs
+    assert calls == [], f"{len(calls)} py4j calls"
+
+
+def test_caught_up_poll_skips_only_an_unchanged_staging(spark, staging, tmp_path):
+    """Once a drain has committed every row, a poll over the same staging
+    files runs nothing. A newly landed file, and a file rewritten in place
+    (a new length, or only a new modification time), are read by the next
+    cycle, so the skip never hides a row."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path, first, rest, orders = staging
+    ing = SnowflakeLikeIngestor(
+        spark, _cfg(_uniq("t_skip")), path, str(tmp_path / "state"),
+        "o_orderkey", mode="offset",
+    )
+    ing.run_until_drained()
+    assert ing.run_cycle().action == "caught-up"
+
+    # a newly landed file (sorting after the drained rows, offset mode's
+    # precondition)
+    rest.withColumn(
+        "o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 100 YEARS")
+    ).write.mode("append").parquet(path)
+    assert ing.run_cycle().rows_ingested > 0
+    ing.run_until_drained()
+    assert ing.sink.read().count() == orders.count()
+    assert ing.run_cycle().action == "caught-up"
+
+    # a file rewritten in place with three more rows
+    victim = sorted(glob.glob(os.path.join(path, "*.parquet")))[0]
+    old = pq.read_table(victim)
+    top = orders.agg(F.max("o_orderkey")).head()[0]
+    extra = (
+        first.limit(3)
+        .withColumn("o_orderkey", F.col("o_orderkey") + top)
+        .withColumn("o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 200 YEARS"))
+        .select(*old.column_names)
+        .toArrow()
+        .cast(old.schema)
+    )
+    # a writer other than Hadoop's leaves no checksum sidecar
+    os.remove(os.path.join(path, f".{os.path.basename(victim)}.crc"))
+    # INT96 timestamps, as Spark wrote the file
+    pq.write_table(
+        pa.concat_tables([old, extra]), victim, use_deprecated_int96_timestamps=True
+    )
+    st = ing.run_cycle()
+    assert (st.action, st.rows_ingested) == ("upsert", 3)
+    assert ing.run_cycle().action == "caught-up"
+
+    # the same bytes under a new modification time are read again
+    mtime = os.stat(victim).st_mtime_ns + 10**9
+    os.utime(victim, ns=(mtime, mtime))
+    assert ing.run_cycle().action == "empty"
+    assert ing.run_cycle().action == "caught-up"
+    assert ing.sink.read().count() == orders.count() + 3
+
+
+def test_source_reader_poll_never_skips(spark, staging, tmp_path):
+    """A ``source_reader`` has no file listing to compare, so every poll
+    after the drain still reads the source."""
+    path, first, _, _ = staging
+    ing = SnowflakeLikeIngestor(
+        spark, _cfg(_uniq("t_reader")), path, str(tmp_path / "state"),
+        "o_orderkey", mode="offset", source_reader=lambda: spark.read.parquet(path),
+    )
+    ing.run_until_drained()
+    for _ in range(2):
+        st, jobs = _jobs(spark, ing.run_cycle)
+        assert (st.action, st.rows_ingested) == ("empty", 0)
+        assert jobs > 0
+    assert ing.sink.read().count() == first.count()
 
 
 def test_cycle_releases_its_checkpoints(spark, staging, tmp_path):
@@ -413,6 +504,62 @@ def test_schema_drift_bad_value_dead_letters(spark, tmp_path):
     assert len([r for r in rows if r[0] == "2"]) == 1
 
 
+def _price_ingestor(spark, tmp_path, rows, table: str) -> SnowflakeLikeIngestor:
+    """An offset-mode ingestor over ``rows`` of (k, shard, price string),
+    cast to a double price with a dead-letter path."""
+    import pyspark.sql.types as T
+
+    path = str(tmp_path / "src")
+    spark.createDataFrame(rows, "k string, shard string, price string").write.parquet(path)
+    target = T.StructType(
+        [
+            T.StructField("k", T.StringType()),
+            T.StructField("shard", T.StringType()),
+            T.StructField("price", T.DoubleType()),
+        ]
+    )
+    cfg = PipelineConfig(
+        source=SnowflakeSourceConfig(
+            table="dl", shard_column="shard", sort_column="k", query_size=10
+        ),
+        sink=IcebergSinkConfig(
+            db="default",
+            table_name=_uniq(table),
+            partition_fields=("shard",),
+            upsert_fields=("k", "shard"),
+            operation="upsert",
+        ),
+    )
+    return SnowflakeLikeIngestor(
+        spark, cfg, path, str(tmp_path / "state"), "k", mode="offset",
+        target_schema=target, dead_letter_path=str(tmp_path / "dead_letter"),
+    )
+
+
+def test_clean_page_writes_no_dead_letters(spark, tmp_path, monkeypatch):
+    """The cycle's checkpoint counts the page's failed casts. A page
+    without one runs no dead-letter write and leaves no epoch directory,
+    and the directory a crashed attempt at that epoch left is removed."""
+    import os
+
+    ing = _price_ingestor(
+        spark, tmp_path, [(f"{i:02d}", f"S{i % 2}", f"{i}.5") for i in range(12)],
+        "t_dl_clean",
+    )
+    stale = os.path.join(ing.dead_letter_path, "epoch=1")
+    spark.createDataFrame([("00", "price", "junk")], "row_key string, field string, raw string").write.parquet(stale)
+    writer = type(spark.range(1).write)
+    real, writes = writer.parquet, []
+    monkeypatch.setattr(
+        writer, "parquet", lambda self, *a, **k: (writes.append(a), real(self, *a, **k))[1]
+    )
+    st = ing.run_cycle()
+    assert (st.cycle, st.rows_ingested) == (1, 12)
+    assert writes == []
+    assert not os.path.exists(stale)
+    assert os.listdir(ing.dead_letter_path) == []
+
+
 def test_dead_letter_without_key_fields_rejected_at_construction(spark, tmp_path):
     """Dead letters are keyed by the first upsert field. An append or
     overwrite sink may leave ``upsert_fields`` empty, so the ingestor must
@@ -461,6 +608,69 @@ def test_upsert_writes_one_file_per_partition(spark, staging, tmp_path):
     assert 0 < len(files) <= n_parts, (
         f"{len(files)} files for {n_parts} partitions"
     )
+
+
+def test_upsert_into_rows_without_ledger_merges(spark):
+    """A target that holds rows but no ledger epochs (made elsewhere, or
+    its ledger lost) is not empty: the first upsert merges the batch into
+    the partition it touches instead of replacing that partition."""
+    t = _uniq("t_noledger")
+    orders = load_table(spark, SF, "orders").select(
+        "o_orderkey", "o_orderdate", "o_totalprice", "o_orderpriority"
+    )
+    orders.write.partitionBy("o_orderpriority").saveAsTable(f"default.{t}")
+    spark.sql(
+        f"ALTER TABLE default.{t} SET SERDEPROPERTIES "
+        "('partitionOverwriteMode'='dynamic')"
+    )
+    sink = CatalogSink(spark, _cfg(t).sink, version_column="o_orderdate")
+    batch = (
+        orders.filter(F.col("o_orderpriority") == "1-URGENT")
+        .limit(5)
+        .withColumn("o_totalprice", F.lit(-1.0))
+    )
+    try:
+        assert sink.write_batch(batch, 1) == "upsert"
+        got = sink.read()
+        assert got.count() == orders.count()
+        assert got.filter(F.col("o_totalprice") == -1.0).count() == 5
+    finally:
+        for name in (f"default.{t}", sink.commits):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_unpartitioned_upsert_merges_twice(spark):
+    """An unpartitioned target cannot be overwritten by a plan that reads
+    it, so its merge is materialized first: a second upsert updates and
+    adds rows and keeps the rest."""
+    orders = load_table(spark, SF, "orders").select(
+        "o_orderkey", "o_orderdate", "o_totalprice"
+    )
+    sink = CatalogSink(
+        spark,
+        IcebergSinkConfig(
+            db="default", table_name=_uniq("t_flat_upsert"),
+            upsert_fields=("o_orderkey",), operation="upsert",
+        ),
+        version_column="o_orderdate",
+    )
+    jsc = spark.sparkContext._jsc
+    first = orders.filter(F.col("o_orderkey") <= 200)
+    second = orders.filter(F.col("o_orderkey").between(101, 300)).withColumn(
+        "o_totalprice", F.lit(-1.0)
+    )
+    try:
+        sink.write_batch(first, 1)
+        before = set(jsc.getPersistentRDDs().keys())
+        assert sink.write_batch(second, 2) == "upsert"
+        assert set(jsc.getPersistentRDDs().keys()) == before
+        got = sink.read()
+        want = orders.filter(F.col("o_orderkey") <= 300)
+        assert got.count() == want.count()
+        assert got.filter(F.col("o_totalprice") == -1.0).count() == second.count()
+    finally:
+        for name in (sink.table, sink.commits):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_pagerank_restores_shuffle_conf(spark):
@@ -786,6 +996,32 @@ def test_compaction_reduces_files_preserves_data(spark, staging, tmp_path):
     assert sink.read().count() == total_before
     spark.sql(f"DROP TABLE IF EXISTS {sink.table}")
     spark.sql(f"DROP TABLE IF EXISTS {sink.commits}")
+
+
+def test_compaction_of_an_unpartitioned_table(spark, staging):
+    """An unpartitioned table is compacted through a materialized copy (its
+    overwrite may not read it) into one file, with the same rows, and the
+    copy is released."""
+    path, first, _, _ = staging
+    sink = CatalogSink(
+        spark,
+        IcebergSinkConfig(
+            db="default", table_name=_uniq("t_flat_compact"), operation="append"
+        ),
+    )
+    for i, b in enumerate(first.randomSplit([1.0] * 3, seed=7)):
+        sink.write_batch(b, epoch=i + 1)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    try:
+        assert len(sink._data_files()) > 1
+        assert sink.compact() == 1
+        assert set(jsc.getPersistentRDDs().keys()) == before
+        assert sink.read().exceptAll(first).count() == 0
+        assert first.exceptAll(sink.read()).count() == 0
+    finally:
+        for name in (sink.table, sink.commits):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_expire_commits_keeps_trailing_window(spark, staging, tmp_path):

@@ -16,6 +16,7 @@ from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spar
     assert_whole_stage_codegen,
     assert_window_group_limit,
     count_exchanges,
+    count_exchanges_below,
     formatted_plan,
 )
 from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.sources.parquet import (
@@ -448,6 +449,44 @@ def test_cast_deadletter_no_shuffle(spark):
     )
     assert count_exchanges(df) == 0
     assert_whole_stage_codegen(df)
+
+
+def test_partitioned_upsert_merge_is_one_exchange(spark):
+    """The upsert merge into a partitioned target hash-partitions its input
+    once, on the partition fields (a subset of the equality keys), so the
+    per-key window adds no exchange. The merge reads the table it
+    overwrites with no materialized copy (a LogicalRDD) in between: a
+    dynamic partition overwrite stages its output."""
+    import uuid
+
+    from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.config import (
+        IcebergSinkConfig,
+    )
+    from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.sinks.catalog import (
+        CatalogSink,
+    )
+
+    orders = load_table(spark, SF, "orders").select(
+        "o_orderkey", "o_orderdate", "o_totalprice", "o_orderpriority"
+    )
+    sink = CatalogSink(
+        spark,
+        IcebergSinkConfig(
+            db="default", table_name=f"t_merge_plan_{uuid.uuid4().hex[:8]}",
+            partition_fields=("o_orderpriority",),
+            upsert_fields=("o_orderkey", "o_orderpriority"), operation="upsert",
+        ),
+        version_column="o_orderdate",
+    )
+    try:
+        sink.write_batch(orders, 1)
+        batch = orders.filter(F.col("o_orderkey") % 100 == 0)
+        merged = sink._upsert_merge(batch, target_empty=False)
+        assert count_exchanges_below(merged, "Window") == 1
+        assert "LogicalRDD" not in merged._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        for name in (sink.table, sink.commits):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_event_paths_single_window_shuffle_then_topk(spark):
