@@ -71,29 +71,6 @@ def count_exchanges(df: DataFrame) -> int:
     )
 
 
-def count_exchanges_below(df: DataFrame, node: str) -> int:
-    """Shuffle exchanges in the subtree of the first plan node whose name
-    starts with ``node``, leaving out those under a ``BroadcastExchange``
-    (they build a broadcast in its own job; they do not partition
-    ``node``'s input)."""
-    tree = []
-    for ln in formatted_plan(df).split("\n\n", 1)[0].splitlines():
-        if ln.startswith("=="):
-            continue
-        name = ln.lstrip(" :+-")
-        tree.append((len(ln) - len(name), name))
-    start = next(i for i, (_, name) in enumerate(tree) if name.startswith(node))
-    top, skip, n = tree[start][0], None, 0
-    for depth, name in tree[start + 1:]:
-        if depth <= top:
-            break
-        if skip is not None and depth > skip:
-            continue
-        skip = depth if name.startswith("BroadcastExchange") else None
-        n += name.startswith("Exchange")
-    return n
-
-
 def assert_whole_stage_codegen(df: DataFrame) -> None:
     """The plan's hot projection/filter spans must be codegen'd (formatted
     mode marks nodes with ``[codegen id : N]``)."""

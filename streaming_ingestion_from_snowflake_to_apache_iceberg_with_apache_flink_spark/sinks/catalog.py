@@ -35,6 +35,7 @@ of Flink's checkpoint barrier — SURVEY.md §3.4).
 
 from __future__ import annotations
 
+import itertools
 import os
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -66,6 +67,17 @@ def _hidden(name: str) -> bool:
     )
 
 
+def _files_under(root: str):
+    """Every file Spark would read under the local file or directory
+    ``root``, walked on the driver in no particular order."""
+    if os.path.isfile(root):
+        yield root
+        return
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [n for n in dirs if not _hidden(n)]
+        yield from (os.path.join(d, n) for n in files if not _hidden(n))
+
+
 def file_signature(path: str) -> tuple | None:
     """``(path, length, mtime_ns)`` of every file Spark would read under
     ``path``, sorted: one driver-side walk, no Spark job. None when
@@ -73,22 +85,13 @@ def file_signature(path: str) -> tuple | None:
     root = path.removeprefix("file:")
     if "://" in root or any(c in root for c in "*?[{") or not os.path.exists(root):
         return None
-    if os.path.isfile(root):
-        walk = [(os.path.dirname(root), [], [os.path.basename(root)])]
-    else:
-        walk = os.walk(root)
     out = []
-    for d, dirs, files in walk:
-        dirs[:] = [n for n in dirs if not _hidden(n)]
-        for n in files:
-            if _hidden(n):
-                continue
-            p = os.path.join(d, n)
-            try:
-                st = os.stat(p)
-            except FileNotFoundError:  # removed mid-walk: nothing to read
-                continue
-            out.append((p, st.st_size, st.st_mtime_ns))
+    for p in _files_under(root):
+        try:
+            st = os.stat(p)
+        except FileNotFoundError:  # removed mid-walk: nothing to read
+            continue
+        out.append((p, st.st_size, st.st_mtime_ns))
     return tuple(sorted(out))
 
 
@@ -153,6 +156,7 @@ class CatalogSink:
         self.history = f"{cfg.db}.{cfg.table_name}__history"
         self.iceberg = self._iceberg_available(spark)
         self._overwrite_checked = False
+        self._location: str | None = None  # the data table's, once read
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {cfg.db}")
 
     # -- Iceberg branch (format-v2 merge-on-read parity) ---------------------
@@ -344,6 +348,7 @@ class CatalogSink:
         carries the format-v2 + merge-on-read TBLPROPERTIES directly)."""
         self._require_dynamic_overwrite()
         if not self.spark.catalog.tableExists(self.table):
+            self._location = None
             if self.iceberg:
                 self.spark.sql(self.iceberg_create_sql(like))
             else:
@@ -368,6 +373,26 @@ class CatalogSink:
 
     def read(self) -> DataFrame:
         return self.spark.table(self.table)
+
+    def _table_location(self) -> str:
+        """The data table's catalog Location. A table made elsewhere (user
+        DDL, ``saveAsTable`` with a path) may live outside the managed
+        location. ``DESCRIBE`` runs no Spark job, and the answer is kept
+        until ``ensure_table`` next creates the table."""
+        if self._location is None:
+            desc = self.spark.sql(f"DESCRIBE TABLE EXTENDED {self.table}").collect()
+            self._location = next(r.data_type for r in desc if r.col_name == "Location")
+        return self._location
+
+    def _data_files(self, first: bool = False) -> list[str]:
+        """The data table's files, walked on the driver at its location
+        (no Spark job); with ``first``, the walk stops at the first file.
+        A remote location is listed by the table's file index."""
+        root = self._table_location().removeprefix("file:")
+        if "://" in root:
+            return list(self.read().inputFiles())
+        files = _files_under(root)
+        return list(itertools.islice(files, 1)) if first else list(files)
 
     # -- snapshots / time travel (Iceberg VERSION AS OF parity) --------------
 
@@ -727,32 +752,41 @@ class CatalogSink:
         merged = merge_upsert(src, keys, version, tiebreakers=["__src"])
         return self._aligned(merged.drop("__src"))
 
+    def _self_overwrite(
+        self, df: DataFrame, held: list[DataFrame]
+    ) -> DataFrame | None:
+        """Overwrite the table with ``df``, a plan that reads the table
+        itself. A dynamic partition overwrite stages its output, so a
+        partitioned table may be read by its own insert. An unpartitioned
+        one may not (``UNSUPPORTED_OVERWRITE.TABLE``): ``df`` is
+        materialized first, and the copy, appended to ``held`` for the
+        caller to release, is returned. None when nothing was
+        materialized."""
+        copy = None
+        if not self.cfg.partition_fields:
+            df = copy = df.localCheckpoint(eager=True)
+            held.append(copy)
+        df.write.format("parquet").mode("overwrite").insertInto(self.table)
+        return copy
+
     def _upsert(self, batch: DataFrame, held: list[DataFrame]) -> DataFrame | None:
         """Copy-on-write MERGE of ``batch`` into the touched partitions in one
         write job. Returns the touched partitions' post-state when it is
         at hand without reading the table again, else None (the snapshot
         then reads them back)."""
-        # Emptiness from the table's files, a driver-side listing: a table
-        # that holds rows without ledger epochs (made elsewhere, or its
-        # ledger lost) still merges, and a replay after a crashed bootstrap
-        # merges with that attempt's own rows — idempotent either way.
-        target_empty = not self._data_files()
+        # The ledger, or else the table's own files (a driver-side walk of
+        # its location): a table that holds rows without ledger epochs
+        # (made elsewhere, or its ledger lost) still merges, and a replay
+        # after a crashed bootstrap merges with that attempt's own rows,
+        # idempotent either way.
+        target_empty = not (self._ledger_epochs() or self._data_files(first=True))
         merged = self._upsert_merge(batch, target_empty)
-        post: DataFrame | None = merged
-        if not target_empty:
-            if self.cfg.partition_fields:
-                # a dynamic partition overwrite stages its output and may
-                # read the table it replaces; the merge read it, so the
-                # snapshot must not evaluate the merge again
-                post = None
-            else:
-                # an unpartitioned overwrite may not read its own table
-                # (UNSUPPORTED_OVERWRITE.TABLE): materialize it first; the
-                # caller releases it once the snapshot has read it
-                merged = post = merged.localCheckpoint(eager=True)
-                held.append(merged)
-        merged.write.format("parquet").mode("overwrite").insertInto(self.table)
-        return post
+        if target_empty:  # the merge reads no table
+            merged.write.format("parquet").mode("overwrite").insertInto(self.table)
+            return merged
+        # a partitioned merge read the table it replaced: the snapshot
+        # reads the post-state back rather than evaluate the merge again
+        return self._self_overwrite(merged, held)
 
     # -- maintenance (Iceberg rewrite_data_files / expire_snapshots parity) --
 
@@ -786,25 +820,14 @@ class CatalogSink:
         self._require_dynamic_overwrite()
         parts = list(self.cfg.partition_fields)
         current = self.read()
-        if parts:
-            # a dynamic partition overwrite may read the table it replaces
-            self._aligned(current.repartition(*parts)).write.format("parquet").mode(
-                "overwrite"
-            ).insertInto(self.table)
-            return len(self._data_files())
-        # an unpartitioned one may not: materialize first
-        compacted = current.coalesce(1).localCheckpoint(eager=True)
+        current = current.repartition(*parts) if parts else current.coalesce(1)
+        held: list[DataFrame] = []
         try:
-            self._aligned(compacted).write.format("parquet").mode(
-                "overwrite"
-            ).insertInto(self.table)
+            self._self_overwrite(self._aligned(current), held)
         finally:
-            release_checkpoint(compacted)
+            for df in held:
+                release_checkpoint(df)
         return len(self._data_files())
-
-    def _data_files(self) -> list[str]:
-        sig = file_signature(self._managed_location(self.cfg.table_name))
-        return [p for p, _, _ in sig or ()]
 
     def expire_commits(self, keep_last: int = 100) -> None:
         """Ledger hygiene (Iceberg expire_snapshots parity): the epoch

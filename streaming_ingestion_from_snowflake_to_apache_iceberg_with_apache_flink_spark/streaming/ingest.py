@@ -13,15 +13,18 @@ Each ``run_cycle``:
    ``offset < rn ≤ offset+size``. The known offsets ride in the plan as a
    literal map, ``coalesce(map(...)[shard], 0)``: a shard the map lacks
    is new and starts at offset 0 (O1+O4), so discovery is no pass of its
-   own. The same window's ``lead`` marks whether a row follows each row in
-   its shard — the *peek* at the next page, without fetching it. All
-   shards fetch in parallel — the reference's keyBy fan-out became a
+   own. In offset mode the same window's ``lead`` marks whether a row
+   follows each row in its shard — the *peek* at the next page, without
+   fetching it; unseen mode keeps a ``row_number``-only window under a
+   literal bound, which Catalyst truncates per shard before the shuffle.
+   All shards fetch in parallel — the reference's keyBy fan-out became a
    partition-parallel window, no per-key loops, no driver iteration over
    shards;
 2. **materialize and count** — the page is materialized ONCE
-   (``localCheckpoint``), and that job also observes, from each shard's
-   last page row, the shard's advance and whether it holds more, plus the
-   page's failed-cast count (``Dataset.observe``: no count job). The rows
+   (``localCheckpoint``), and that job also observes the page's row
+   count and shards — in offset mode, from each shard's last page row,
+   the shard's advance and whether it holds more — plus the page's
+   failed-cast count (``Dataset.observe``: no count job). The rows
    committed and the offsets advanced come from the same evaluation (the
    reference's ``offset += rows_returned``);
 3. **cast** — the O9 whitelist projection over the materialized page; the
@@ -306,15 +309,37 @@ class SnowflakeLikeIngestor:
             batch, self.target_schema, lenient=self.dead_letter_path is not None
         )
 
-    @staticmethod
-    def _ranked(src: DataFrame, w, offset: Column) -> DataFrame:
-        """``src`` with each row's rank in its shard, whether a row follows
-        it there, and its shard's offset."""
-        return (
-            src.withColumn("__rn", F.row_number().over(w))
-            .withColumn("__more", F.lead(F.lit(1)).over(w).isNotNull())
-            .withColumn("__off", offset)
+    def _page(self, src: DataFrame, offset: Column | None) -> tuple[DataFrame, Column]:
+        """Every shard's next page of ``src`` in one ranked plan (O6/O7), and
+        the aggregate of per-shard rows its checkpoint observes: ``shard``,
+        and in offset mode the shard's advance ``n`` and whether a row
+        follows the page, ``more``. ``offset`` is each shard's known
+        offset, or None in unseen mode, where every pending row is
+        unfetched and the page is each shard's first ``size`` rows."""
+        cfg = self.cfg.source
+        shard = F.col(cfg.shard_column).cast("string")
+        size = cfg.query_size
+        w = Window.partitionBy(cfg.shard_column).orderBy(
+            F.col(cfg.sort_column).asc(), F.col(self.tiebreaker).asc()
         )
+        ranked = src.withColumn("__rn", F.row_number().over(w))
+        rn = F.col("__rn")
+        if offset is None:
+            # a literal rank bound over a row_number-only window: Catalyst
+            # truncates each shard to `size` rows before the shuffle
+            # (WindowGroupLimit), so no lead() here
+            page = ranked.filter(rn <= size)
+            return page, F.collect_set(F.struct(shard.alias("shard")))
+        # the same window's lead() peeks whether a row follows each row
+        ranked = ranked.withColumn(
+            "__more", F.lead(F.lit(1)).over(w).isNotNull()
+        ).withColumn("__off", offset)
+        off, more = F.col("__off"), F.col("__more")
+        page = ranked.filter((rn > off) & (rn <= off + size))
+        # each shard's last page row carries the shard's advance and more
+        last = (rn == off + size) | ~more
+        shards = F.struct(shard.alias("shard"), (rn - off).alias("n"), more.alias("more"))
+        return page, F.collect_list(F.when(last, shards))
 
     def run_cycle(self) -> CycleStats:
         listing = self._listing()
@@ -323,21 +348,14 @@ class SnowflakeLikeIngestor:
             self._cycle += 1
             return CycleStats(self._cycle, self._idle[1], 0, 0, "caught-up")
         self._idle = None
-        cfg = self.cfg.source
         src = self._source(listing)
-        shard_c = cfg.shard_column
-        shard = F.col(shard_c).cast("string")
-        size = cfg.query_size
+        shard = F.col(self.cfg.source.shard_column).cast("string")
 
-        # O6/O7: every shard's next page in one ranked plan
-        w = Window.partitionBy(shard_c).orderBy(
-            F.col(cfg.sort_column).asc(), F.col(self.tiebreaker).asc()
-        )
         if self.mode == "offset":
             # O1+O4 inside the page: a shard missing from the map is new
             # and starts at 0, so no discovery pass reads the source
             known = self.load_offsets()
-            ranked = self._ranked(src, w, _offset_of(shard, known))
+            page, shards = self._page(src, _offset_of(shard, known))
         else:  # "unseen": page over rows whose equality keys aren't ingested
             # the distinct shard set prunes the target side of the anti-join
             shard_vals = [r[0] for r in src.select(shard).distinct().collect()]
@@ -349,16 +367,11 @@ class SnowflakeLikeIngestor:
                 }
             else:
                 known = {}
-            ranked = self._ranked(self.pending_unseen(src, shard_vals), w, F.lit(0))
-        rn, off, more = F.col("__rn"), F.col("__off"), F.col("__more")
-        page = ranked.filter((rn > off) & (rn <= off + size))
-        # Each shard's last page row carries the shard's advance and whether
-        # a row follows it. The checkpoint's own job collects these (an
-        # observation, no count job), so the rows committed and the offsets
-        # advanced come from one evaluation.
-        last = (rn == off + size) | ~more
-        shards = F.struct(shard.alias("shard"), (rn - off).alias("n"), more.alias("more"))
-        observed = [F.collect_list(F.when(last, shards)).alias("shards")]
+            page, shards = self._page(self.pending_unseen(src, shard_vals), None)
+        # The checkpoint's own job observes the page's shards and row count
+        # (no count job), so the rows committed and the offsets advanced
+        # come from one evaluation.
+        observed = [shards.alias("shards"), F.count(F.lit(1)).alias("rows")]
         dead_letters = self.target_schema is not None and self.dead_letter_path is not None
         if dead_letters:
             from ..schema import cast_failures
@@ -378,19 +391,16 @@ class SnowflakeLikeIngestor:
         )
         try:
             metrics = obs.get
-            ingested = {r.shard: r.n for r in metrics["shards"]}
-            rows = sum(ingested.values())
-            caught_up = not any(r.more for r in metrics["shards"])
+            rows = metrics["rows"]
+            page_shards = {r.shard for r in metrics["shards"]}
             self._cycle += 1
             batch = self._cast(page, metrics.get("failed") or 0)
             advance = rows > 0 and self.mode == "offset"
             # O7: stage the advanced offsets under this epoch; the commit
             # below makes them live (load_offsets)
             if advance:
-                self._stage_offsets(
-                    self._cycle,
-                    {**known, **{s: known.get(s, 0) + n for s, n in ingested.items()}},
-                )
+                moved = {r.shard: known.get(r.shard, 0) + r.n for r in metrics["shards"]}
+                self._stage_offsets(self._cycle, {**known, **moved})
 
             # O12: commit batch
             action = self.sink.write_batch(batch, epoch=self._cycle) if rows else "empty"
@@ -398,13 +408,17 @@ class SnowflakeLikeIngestor:
             release_checkpoint(page)
         if advance:
             self._prune_offsets(live=self._cycle)
-        seen = len(known.keys() | ingested.keys())
-        if caught_up and listing is not None and self.mode == "offset":
+        seen = len(known.keys() | page_shards)
+        if (
+            self.mode == "offset"
+            and listing is not None
+            and not any(r.more for r in metrics["shards"])
+        ):
             # every row this listing holds is committed. Not in unseen
             # mode: its state is the target table, which other writes
             # (a purge) can change while the staging holds still.
             self._idle = (listing, seen)
-        return CycleStats(self._cycle, seen, len(ingested.keys() - known.keys()), rows, action)
+        return CycleStats(self._cycle, seen, len(page_shards - known.keys()), rows, action)
 
     def run_until_drained(self, max_cycles: int = 100) -> list[CycleStats]:
         """Drain the source: cycles until a pass ingests nothing (the batch

@@ -610,30 +610,34 @@ def test_upsert_writes_one_file_per_partition(spark, staging, tmp_path):
     )
 
 
-def test_upsert_into_rows_without_ledger_merges(spark):
+@pytest.mark.parametrize("location", ["managed", "own"])
+def test_upsert_into_rows_without_ledger_merges(spark, tmp_path, location):
     """A target that holds rows but no ledger epochs (made elsewhere, or
-    its ledger lost) is not empty: the first upsert merges the batch into
-    the partition it touches instead of replacing that partition."""
+    its ledger lost) is not empty: every upsert, the first and the later
+    ones, merges the batch into the partition it touches instead of
+    replacing that partition. That holds too for a table made with its
+    own LOCATION, whose files lie outside the managed location."""
     t = _uniq("t_noledger")
     orders = load_table(spark, SF, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice", "o_orderpriority"
     )
-    orders.write.partitionBy("o_orderpriority").saveAsTable(f"default.{t}")
+    writer = orders.write.partitionBy("o_orderpriority")
+    if location == "own":
+        writer = writer.option("path", str(tmp_path / "elsewhere"))
+    writer.saveAsTable(f"default.{t}")
     spark.sql(
         f"ALTER TABLE default.{t} SET SERDEPROPERTIES "
         "('partitionOverwriteMode'='dynamic')"
     )
     sink = CatalogSink(spark, _cfg(t).sink, version_column="o_orderdate")
-    batch = (
-        orders.filter(F.col("o_orderpriority") == "1-URGENT")
-        .limit(5)
-        .withColumn("o_totalprice", F.lit(-1.0))
-    )
+    urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT").orderBy("o_orderkey")
     try:
-        assert sink.write_batch(batch, 1) == "upsert"
-        got = sink.read()
-        assert got.count() == orders.count()
-        assert got.filter(F.col("o_totalprice") == -1.0).count() == 5
+        for epoch, batch in enumerate((urgent.limit(5), urgent.offset(5).limit(5)), 1):
+            batch = batch.withColumn("o_totalprice", F.lit(-1.0))
+            assert sink.write_batch(batch, epoch) == "upsert"
+            got = sink.read()
+            assert got.count() == orders.count()
+            assert got.filter(F.col("o_totalprice") == -1.0).count() == 5 * epoch
     finally:
         for name in (f"default.{t}", sink.commits):
             spark.sql(f"DROP TABLE IF EXISTS {name}")

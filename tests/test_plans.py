@@ -16,7 +16,6 @@ from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spar
     assert_whole_stage_codegen,
     assert_window_group_limit,
     count_exchanges,
-    count_exchanges_below,
     formatted_plan,
 )
 from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.sources.parquet import (
@@ -454,9 +453,12 @@ def test_cast_deadletter_no_shuffle(spark):
 def test_partitioned_upsert_merge_is_one_exchange(spark):
     """The upsert merge into a partitioned target hash-partitions its input
     once, on the partition fields (a subset of the equality keys), so the
-    per-key window adds no exchange. The merge reads the table it
-    overwrites with no materialized copy (a LogicalRDD) in between: a
-    dynamic partition overwrite stages its output."""
+    per-key window adds no exchange. Three in all: that one and the
+    touched-partition distinct, which the plan lists twice (again as the
+    target scan's dynamic-pruning subquery); a window shuffle of its own
+    would make four. The merge reads the table it overwrites with no
+    materialized copy (a LogicalRDD) in between: a dynamic partition
+    overwrite stages its output."""
     import uuid
 
     from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.config import (
@@ -482,11 +484,44 @@ def test_partitioned_upsert_merge_is_one_exchange(spark):
         sink.write_batch(orders, 1)
         batch = orders.filter(F.col("o_orderkey") % 100 == 0)
         merged = sink._upsert_merge(batch, target_empty=False)
-        assert count_exchanges_below(merged, "Window") == 1
+        assert count_exchanges(merged) == 3
         assert "LogicalRDD" not in merged._jdf.queryExecution().optimizedPlan().toString()
     finally:
         for name in (sink.table, sink.commits):
             spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_unseen_page_truncates_shards_before_the_shuffle(spark, tmp_path):
+    """An unseen-mode page is each shard's first ``query_size`` pending
+    rows: a row_number-only window under a literal bound, which Catalyst
+    truncates per shard map-side. A peek (lead) in that window would
+    disable the truncation and shuffle every pending row."""
+    from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.config import (
+        IcebergSinkConfig,
+        PipelineConfig,
+        SnowflakeSourceConfig,
+    )
+    from streaming_ingestion_from_snowflake_to_apache_iceberg_with_apache_flink_spark.streaming.ingest import (
+        SnowflakeLikeIngestor,
+    )
+
+    cfg = PipelineConfig(
+        source=SnowflakeSourceConfig(
+            table="orders", shard_column="o_orderpriority",
+            sort_column="o_orderdate", query_size=50,
+        ),
+        sink=IcebergSinkConfig(
+            db="default", table_name="t_unseen_page_plan",
+            partition_fields=("o_orderpriority",),
+            upsert_fields=("o_orderkey", "o_orderpriority"), operation="upsert",
+        ),
+    )
+    ing = SnowflakeLikeIngestor(
+        spark, cfg, f"{SF}/orders.parquet", str(tmp_path / "state"), "o_orderkey"
+    )
+    page, _ = ing._page(load_table(spark, SF, "orders"), None)
+    assert_window_group_limit(page)
+    assert count_exchanges(page) == 1
 
 
 def test_event_paths_single_window_shuffle_then_topk(spark):
