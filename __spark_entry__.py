@@ -3896,7 +3896,7 @@ def q_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot time travel through the ACTUAL sink runtime
-    (sinks/catalog.CatalogSink snapshots=True): two upsert commits split
+    (sinks/catalog.CatalogSink, config snapshots=True): two upsert commits split
     by order date, then ``read_as_of(1)`` — reconstructing the NON-latest
     state after epoch 2 has overwritten its partitions; must hash-match
     the first batch (unique keys ⇒ upsert is identity). Three-epoch
@@ -3944,10 +3944,9 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         partition_fields=(ORDERS_SHARD,),
         upsert_fields=(ORDERS_KEY, ORDERS_SHARD),
         operation="upsert",
+        snapshots=True,
     )
-    sink = CatalogSink(
-        spark, cfg, version_column=ORDERS_SORT, snapshots=True
-    )
+    sink = CatalogSink(spark, cfg, version_column=ORDERS_SORT)
     cut = F.lit("2000-01-01").cast("timestamp")
     d = F.col(ORDERS_SORT)
     batches = [orders.filter(d < cut), orders.filter(d >= cut)]
@@ -4003,8 +4002,9 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         partition_fields=(ORDERS_SHARD,),
         upsert_fields=(ORDERS_KEY, ORDERS_SHARD),
         operation="upsert",
+        snapshots=True,
     )
-    sink = CatalogSink(spark, cfg, version_column=ORDERS_SORT, snapshots=True)
+    sink = CatalogSink(spark, cfg, version_column=ORDERS_SORT)
     cut = F.lit("2000-01-01").cast("timestamp")
     bump = orders.withColumn(
         "o_totalprice",

@@ -30,7 +30,8 @@ go (emptied by a purge, expired snapshots) are dropped by DDL.
 Exactly-once: every committed batch records its epoch in a ``__commits``
 ledger table; ``write_batch`` skips epochs already present, which makes the
 ``foreachBatch`` replay after a crash idempotent (the Spark commit-log role
-of Flink's checkpoint barrier — SURVEY.md §3.4).
+of Flink's checkpoint barrier — SURVEY.md §3.4). The same record carries
+the ingestor's source offsets, so data and progress publish together.
 """
 
 from __future__ import annotations
@@ -137,26 +138,28 @@ class CatalogSink:
         spark: SparkSession,
         cfg: IcebergSinkConfig,
         version_column: str | None = None,
-        snapshots: bool = False,
     ):
         """``version_column`` orders last-writer-wins for upsert mode (the
         reference relies on Iceberg sequence numbers for this; a batch MERGE
         needs the ordering to be explicit).
 
-        ``snapshots=True`` keeps a per-commit history table enabling
+        ``cfg.snapshots`` keeps a per-commit history table enabling
         ``read_as_of(epoch)`` time travel on the parquet fallback (under a
         real Iceberg catalog, ``VERSION AS OF`` is native and the history
         table is unnecessary — see ``read_as_of``)."""
         self.spark = spark
         self.cfg = cfg
         self.version_column = version_column
-        self.snapshots = snapshots
+        # source offsets the next write_batch publishes in its ledger record
+        self.progress: dict[str, int] | None = None
         self.table = f"{cfg.db}.{cfg.table_name}"
         self.commits = f"{cfg.db}.{cfg.table_name}__commits"
         self.history = f"{cfg.db}.{cfg.table_name}__history"
         self.iceberg = self._iceberg_available(spark)
         self._overwrite_checked = False
         self._location: str | None = None  # the data table's, once read
+        self._epochs: set[int] | None = None  # the ledger's, once read
+        self._offsets: tuple[int, dict[str, int]] | None = None  # newest carried
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {cfg.db}")
 
     # -- Iceberg branch (format-v2 merge-on-read parity) ---------------------
@@ -303,7 +306,7 @@ class CatalogSink:
         if self._overwrite_checked or self.iceberg:
             return
         names = [self.table] if self.cfg.partition_fields else []
-        if self.snapshots:
+        if self.cfg.snapshots:
             names.append(self.history)
         for name in names:
             if not self.spark.catalog.tableExists(name):
@@ -360,7 +363,7 @@ class CatalogSink:
                 partitioned=False,
             )
         if (
-            self.snapshots
+            self.cfg.snapshots
             and not self.iceberg  # native tags replace the history table
             and not self.spark.catalog.tableExists(self.history)
         ):
@@ -445,8 +448,8 @@ class CatalogSink:
         Under a real Iceberg catalog use
         ``spark.sql(f"SELECT * FROM {table} VERSION AS OF …")`` instead —
         the history table is a fallback-only artifact."""
-        if not self.snapshots:
-            raise ValueError("sink built with snapshots=False")
+        if not self.cfg.snapshots:
+            raise ValueError("sink config has snapshots=False")
         if self.iceberg:
             return self.spark.sql(self.iceberg_as_of_sql(epoch))
         from pyspark.sql import Window as W
@@ -579,7 +582,7 @@ class CatalogSink:
         parts = list(self.cfg.partition_fields)
         kset = keys.select(*kcols).distinct().localCheckpoint(eager=True)
         targets = [(self.table, parts)]
-        if self.snapshots and self.spark.catalog.tableExists(self.history):
+        if self.cfg.snapshots and self.spark.catalog.tableExists(self.history):
             targets.append((self.history, ["__epoch"] + parts))
         for name, pcols in targets:
             tbl = self.spark.table(name)
@@ -609,35 +612,42 @@ class CatalogSink:
     # one-row Spark write costs a full job-launch round trip (~0.5 s of
     # scheduler latency at ANY data scale, three times per commit), which
     # is why Iceberg's own commit protocol does its metadata writes on the
-    # driver. The ledger stays a registered parquet TABLE (external
-    # readers and expire_commits use spark.table) — the driver appends
-    # atomically (write temp + rename) into its location and refreshes the
-    # catalog's cached file listing. In-memory epoch set is a cache only;
-    # a fresh sink instance rebuilds it from the files (restart-safe under
-    # the documented single-writer-per-table contract).
+    # driver. The ledger stays a registered parquet TABLE of ``epoch`` that
+    # external readers query with spark.table — the driver appends one
+    # file per commit atomically (write temp + rename) into its location
+    # and refreshes the catalog's cached file listing. A record may also
+    # carry the source's ``offsets`` (map<string,bigint>, read by the
+    # driver only), so the rename that publishes an epoch publishes the
+    # ingestor's progress with it: one durable step, as the reference's
+    # checkpoint barrier covers its offset state and its Iceberg commit.
+    # The in-memory epoch set and newest offsets are a cache only; a fresh
+    # sink instance rebuilds them from the files (restart-safe under the
+    # documented single-writer-per-table contract).
 
     def _ledger_location(self) -> str:
         return self._managed_location(f"{self.cfg.table_name}__commits")
 
+    def _ledger_files(self):
+        """``(path, records)`` of every ledger file, read with pyarrow on
+        the driver. A record written before records carried offsets has
+        none, and a file rewritten by Spark may hold several records."""
+        import pyarrow.parquet as pq
+
+        for p in _files_under(self._ledger_location()):
+            yield p, pq.read_table(p).to_pylist()
+
+    def _note(self, epoch: int, offsets) -> None:
+        self._epochs.add(epoch)
+        if offsets is not None and (self._offsets is None or epoch >= self._offsets[0]):
+            self._offsets = (epoch, dict(offsets))
+
     def _ledger_epochs(self) -> set[int]:
-        if getattr(self, "_epochs_cache", None) is None:
-            import glob
-
-            import pyarrow.parquet as pq
-
-            loc = self._ledger_location()
-            epochs: set[int] = set()
-            for p in glob.glob(os.path.join(loc, "*")):
-                base = os.path.basename(p)
-                if not os.path.isfile(p) or base.startswith((".", "_")):
-                    continue
-                col = pq.read_table(p, columns=["epoch"]).column("epoch")
-                epochs.update(int(v) for v in col.to_pylist() if v is not None)
-            self._epochs_cache = epochs
-        return self._epochs_cache
-
-    def _ledger_invalidate(self) -> None:
-        self._epochs_cache = None
+        if self._epochs is None:
+            self._epochs = set()
+            for _, records in self._ledger_files():
+                for r in records:
+                    self._note(r["epoch"], r.get("offsets"))
+        return self._epochs
 
     def last_epoch(self) -> int:
         """Highest committed epoch (0 if none) — lets a restarted driver
@@ -645,10 +655,18 @@ class CatalogSink:
         epochs = self._ledger_epochs()
         return max(epochs) if epochs else 0
 
+    def committed_offsets(self) -> dict[str, int]:
+        """The source offsets of the newest ledger record that carries
+        them (``{}`` if none): what the ingestor had fetched when that
+        epoch's data committed. Read with the epoch set, so no Spark job
+        and, after a commit, no file read."""
+        self._ledger_epochs()
+        return dict(self._offsets[1]) if self._offsets else {}
+
     def _committed(self, epoch: int) -> bool:
         return int(epoch) in self._ledger_epochs()
 
-    def _record(self, epoch: int) -> None:
+    def _record(self, epoch: int, offsets: dict[str, int] | None) -> None:
         import uuid
 
         import pyarrow as pa
@@ -658,11 +676,14 @@ class CatalogSink:
         os.makedirs(loc, exist_ok=True)
         name = f"epoch-{int(epoch)}-{uuid.uuid4().hex[:8]}.parquet"
         tmp = os.path.join(loc, f".{name}.tmp")  # dot-prefixed: invisible to scans
-        pq.write_table(
-            pa.table({"epoch": pa.array([int(epoch)], type=pa.int64())}), tmp
-        )
+        record = {
+            "epoch": pa.array([int(epoch)], pa.int64()),
+            "offsets": pa.array([offsets], pa.map_(pa.string(), pa.int64())),
+        }
+        pq.write_table(pa.table(record), tmp)
         os.rename(tmp, os.path.join(loc, name))  # atomic publish
-        self._ledger_epochs().add(int(epoch))
+        self._ledger_epochs()  # loaded before _note adds to it
+        self._note(int(epoch), offsets)
         # drop the catalog's cached file listing so spark.table(commits)
         # sees the new marker (driver-only, no job)
         self.spark.catalog.refreshTable(self.commits)
@@ -671,7 +692,9 @@ class CatalogSink:
 
     def write_batch(self, batch: DataFrame, epoch: int) -> str:
         """Mode-dispatched commit; replayed epochs are no-ops. Returns the
-        action taken (for tests/observability)."""
+        action taken (for tests/observability). The ledger record carries
+        ``progress``, which the call consumes whether or not it commits."""
+        progress, self.progress = self.progress, None
         self.ensure_table(batch)
         if self._committed(epoch):
             return "skipped-replay"
@@ -680,11 +703,11 @@ class CatalogSink:
             if op not in ("append", "overwrite", "upsert"):
                 raise UnsupportedOperationError(op)
             self._iceberg_write(self._aligned(batch))
-            if self.snapshots:
+            if self.cfg.snapshots:
                 # tag the fresh snapshot with the epoch: the durable
                 # version handle native VERSION AS OF addresses
                 self.spark.sql(self.iceberg_tag_sql(epoch))
-            self._record(epoch)
+            self._record(epoch, progress)
             return f"iceberg-{op}"
         post: DataFrame | None = None
         held: list[DataFrame] = []  # checkpoints this commit made
@@ -697,12 +720,12 @@ class CatalogSink:
                 post = self._upsert(batch, held)
             else:  # unreachable: config validates, but keep the reference's throw
                 raise UnsupportedOperationError(op)
-            if self.snapshots:
+            if self.cfg.snapshots:
                 self._snapshot(batch, epoch, post_state=post)
         finally:
             for df in held:
                 release_checkpoint(df)
-        self._record(epoch)
+        self._record(epoch, progress)
         return op
 
     def _aligned(self, df: DataFrame) -> DataFrame:
@@ -831,17 +854,24 @@ class CatalogSink:
 
     def expire_commits(self, keep_last: int = 100) -> None:
         """Ledger hygiene (Iceberg expire_snapshots parity): the epoch
-        ledger grows one row per commit forever; keep the trailing window
-        that replay detection actually needs (a restarted stream can only
-        replay epochs since its checkpoint)."""
+        ledger grows one record per commit forever; keep the trailing
+        ``keep_last`` epochs that replay detection actually needs (a
+        restarted stream can only replay epochs since its checkpoint).
+        Driver-side deletes: a file goes only when every epoch in it has
+        expired, and never the one whose offsets are live, so no kept
+        record is rewritten and no offsets are lost. ``keep_last`` must be
+        at least 1: an empty ledger would restart the epoch counter and
+        the offsets at 0."""
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be at least 1, got {keep_last}")
         hi = self.last_epoch()
-        keep = self.spark.table(self.commits).filter(
-            F.col("epoch") > hi - keep_last
-        )
-        keep.localCheckpoint(eager=True).write.format("parquet").mode(
-            "overwrite"
-        ).insertInto(self.commits)
-        self._ledger_invalidate()  # rewritten by a Spark job, not _record
+        live = self._offsets[0] if self._offsets else None
+        for p, records in self._ledger_files():
+            epochs = [r["epoch"] for r in records]
+            if live not in epochs and all(e <= hi - keep_last for e in epochs):
+                os.remove(p)
+                self._epochs.difference_update(epochs)
+        self.spark.catalog.refreshTable(self.commits)
 
 
 def write_audit_publish(

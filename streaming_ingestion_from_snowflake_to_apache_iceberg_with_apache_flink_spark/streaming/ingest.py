@@ -29,11 +29,11 @@ Each ``run_cycle``:
    reference's ``offset += rows_returned``);
 3. **cast** — the O9 whitelist projection over the materialized page; the
    dead letters are written only when the count saw a failed cast;
-4. **commit** — stage the advanced offsets under the cycle's epoch, then
-   the mode-dispatched sink write (O12) with an epoch ledger. The ledger
-   record publishes data and offsets together: state only moves forward
-   once data is durable, and data never commits without its offsets.
-   The cycle then releases its page checkpoint.
+4. **commit** — the mode-dispatched sink write (O12), then the epoch's
+   ledger record, which carries the advanced offsets. One atomic rename
+   publishes data and offsets together: state only moves forward once
+   data is durable, and data never commits without its offsets. The
+   cycle then releases its page checkpoint.
 
 A poll that finds nothing runs nothing. The staging's file signature
 (path, length and modification time of every file, one driver-side
@@ -46,16 +46,16 @@ trigger with no new input plans nothing. A newly landed or rewritten file
 changes the signature and the next cycle reads again. A ``source_reader``
 has no listing and never skips.
 
-Offsets are driver metadata, one row per shard — the checkpointable
+Offsets are driver metadata, one map entry per shard — the checkpointable
 analogue of the reference's ``ValueState<Integer>``
-(``SnowflakeProcessFunction.java:21-23``): a parquet file written and
-read with pyarrow on the driver (no Spark job), one directory per epoch,
-``offsets.<epoch>``; the live table is the newest one whose epoch the
-sink's ledger has committed (the offset-log → execute → commit-log
-discipline of Structured Streaming). The per-key processing-time
-timers (O5) collapse into the cycle cadence: every cycle touches every
-shard, which is what the reference converges to when all timers share one
-interval.
+(``SnowflakeProcessFunction.java:21-23``): they ride in the sink's
+epoch-ledger record (``CatalogSink.progress`` → ``committed_offsets``), a
+file written and read with pyarrow on the driver (no Spark job). The live
+offsets are those of the newest committed record, as a Structured
+Streaming sink records the batch id with the data it commits. The per-key
+processing-time timers (O5) collapse into the cycle cadence: every cycle
+touches every shard, which is what the reference converges to when all
+timers share one interval.
 
 The Structured Streaming wrapper (``stream_ingest``) runs the same commit
 path from ``foreachBatch`` over a file stream, with the checkpoint dir
@@ -68,8 +68,6 @@ import os
 import shutil
 from dataclasses import dataclass
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -84,15 +82,6 @@ class CycleStats:
     new_shards: int
     rows_ingested: int
     action: str
-
-
-def _offsets_table(offsets: dict[str, int]) -> pa.Table:
-    return pa.table(
-        {
-            "shard_value": pa.array(list(offsets), pa.string()),
-            "offset": pa.array(list(offsets.values()), pa.int64()),
-        }
-    )
 
 
 def _offset_of(shard: Column, offsets: dict[str, int]) -> Column:
@@ -151,6 +140,10 @@ class SnowflakeLikeIngestor:
         rows (schema.cast_deadletter) instead of silently nulling — the
         job survives, nothing is lost. The row key is the first of
         ``sink.upsert_fields``, so that pair needs the key set.
+
+        ``state_dir`` is unused: the offsets live in the sink's ledger.
+        It stays because the benchmark's workloads pass it positionally,
+        and can go when they stop.
         """
         if mode not in ("unseen", "offset"):
             raise ValueError(f"unknown ingest mode {mode!r}")
@@ -172,14 +165,8 @@ class SnowflakeLikeIngestor:
         self.source_reader = source_reader
         self.target_schema = target_schema
         self.dead_letter_path = dead_letter_path
-        self.offsets_path = os.path.join(state_dir, "offsets")
         self.tiebreaker = tiebreaker
-        self.sink = CatalogSink(
-            spark,
-            cfg.sink,
-            version_column=cfg.source.sort_column,
-            snapshots=cfg.sink.snapshots,
-        )
+        self.sink = CatalogSink(spark, cfg.sink, version_column=cfg.source.sort_column)
         # resume the epoch counter past durable commits so a restarted
         # driver never reuses a ledgered epoch id
         self._cycle = self.sink.last_epoch()
@@ -191,47 +178,11 @@ class SnowflakeLikeIngestor:
 
     # -- state (the ValueState analogue) ------------------------------------
 
-    def _offsets_dir(self, epoch: int) -> str:
-        return f"{self.offsets_path}.{epoch}"
-
-    def _offset_epochs(self) -> list[int]:
-        parent, prefix = os.path.split(self.offsets_path + ".")
-        if not os.path.isdir(parent):
-            return []
-        return sorted(
-            int(n[len(prefix):])
-            for n in os.listdir(parent)
-            if n.startswith(prefix) and n[len(prefix):].isdigit()
-        )
-
     def load_offsets(self) -> dict[str, int]:
-        """``{shard_value: offset}`` from the offsets table of the newest
-        epoch the sink has committed. A crash before that epoch's ledger
-        record leaves the previous table live; a staged table whose epoch
-        never committed is ignored until the cycle that next reaches its
-        epoch overwrites it. One row per shard: driver metadata, read
-        without a Spark job, like the sink's epoch ledger."""
-        live = [e for e in self._offset_epochs() if self.sink._committed(e)]
-        if not live:
-            return {}
-        t = pq.read_table(self._offsets_dir(live[-1]), columns=["shard_value", "offset"])
-        return dict(zip(t.column("shard_value").to_pylist(), t.column("offset").to_pylist()))
-
-    def _stage_offsets(self, epoch: int, offsets: dict[str, int]) -> None:
-        """Write ``offsets.<epoch>`` from the driver: temp file + rename, so
-        the table is either whole or absent. Whatever a crashed cycle left
-        at this uncommitted epoch is replaced."""
-        d = self._offsets_dir(epoch)
-        shutil.rmtree(d, ignore_errors=True)
-        os.makedirs(d)
-        tmp = os.path.join(d, ".offsets.parquet.tmp")  # dot-prefixed: never read
-        pq.write_table(_offsets_table(offsets), tmp)
-        os.rename(tmp, os.path.join(d, "offsets.parquet"))
-
-    def _prune_offsets(self, live: int) -> None:
-        for e in self._offset_epochs():
-            if e < live:
-                shutil.rmtree(self._offsets_dir(e), ignore_errors=True)
+        """``{shard_value: offset}`` as of the newest epoch the sink has
+        committed, from that epoch's ledger record. A crash before the
+        record leaves the previous epoch's offsets live."""
+        return self.sink.committed_offsets()
 
     # -- one micro-batch cycle ---------------------------------------------
 
@@ -395,19 +346,16 @@ class SnowflakeLikeIngestor:
             page_shards = {r.shard for r in metrics["shards"]}
             self._cycle += 1
             batch = self._cast(page, metrics.get("failed") or 0)
-            advance = rows > 0 and self.mode == "offset"
-            # O7: stage the advanced offsets under this epoch; the commit
-            # below makes them live (load_offsets)
-            if advance:
+            if rows and self.mode == "offset":
+                # O7: the advanced offsets ride in this epoch's ledger
+                # record, which the commit below publishes (load_offsets)
                 moved = {r.shard: known.get(r.shard, 0) + r.n for r in metrics["shards"]}
-                self._stage_offsets(self._cycle, {**known, **moved})
+                self.sink.progress = {**known, **moved}
 
             # O12: commit batch
             action = self.sink.write_batch(batch, epoch=self._cycle) if rows else "empty"
         finally:
             release_checkpoint(page)
-        if advance:
-            self._prune_offsets(live=self._cycle)
         seen = len(known.keys() | page_shards)
         if (
             self.mode == "offset"
@@ -450,12 +398,7 @@ def stream_ingest(
     a shared directory (the file-stream source requires a directory base
     path) — streaming straight off a landing zone without a staging copy.
     """
-    sink = CatalogSink(
-        spark,
-        cfg.sink,
-        version_column=cfg.source.sort_column,
-        snapshots=cfg.sink.snapshots,
-    )
+    sink = CatalogSink(spark, cfg.sink, version_column=cfg.source.sort_column)
 
     reader = spark.readStream.schema(schema)
     if path_glob_filter:

@@ -5,7 +5,9 @@ wrapper."""
 
 from __future__ import annotations
 
+import os
 import uuid
+from dataclasses import replace
 
 import pytest
 
@@ -84,13 +86,12 @@ def test_ingest_drains_source_exactly_once(spark, staging, tmp_path, mode):
 
 @pytest.mark.parametrize("step", ["before_commit", "after_commit"])
 def test_offsets_commit_survives_crash(spark, staging, tmp_path, step):
-    """Offset mode stages each epoch's offsets table beside the live one,
-    and the sink's ledger record publishes it. A crash just before that
-    commit or just after it (before the superseded table is pruned) must
-    leave a non-empty table that matches the committed rows, and an
-    ingestor rebuilt from disk must drain to the target of an
-    uninterrupted drain. The sink appends, so a re-fetched page would
-    show up as duplicate rows."""
+    """Offset mode carries each epoch's offsets in the sink's ledger
+    record, which publishes them with the data. A crash just before that
+    commit or just after its record is written must leave non-empty
+    offsets that match the committed rows, and an ingestor rebuilt from
+    disk must drain to the target of an uninterrupted drain. The sink
+    appends, so a re-fetched page would show up as duplicate rows."""
     path, first, _, _ = staging
 
     def ingestor(table: str, state: str) -> SnowflakeLikeIngestor:
@@ -111,7 +112,13 @@ def test_offsets_commit_survives_crash(spark, staging, tmp_path, step):
     if step == "before_commit":
         ing.sink.write_batch = boom
     else:
-        ing._prune_offsets = boom
+        record = ing.sink._record
+
+        def after_commit(*a, **k):
+            record(*a, **k)
+            boom()
+
+        ing.sink._record = after_commit
     with pytest.raises(RuntimeError, match="injected crash"):
         ing.run_cycle()
 
@@ -125,6 +132,79 @@ def test_offsets_commit_survives_crash(spark, staging, tmp_path, step):
     got, ref = resumed.sink.read(), want.sink.read()
     assert got.count() == ref.count() == first.count()
     assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
+
+
+def test_unrecorded_commit_replays_idempotently(spark, staging, tmp_path):
+    """A crash inside the commit, after the data write and before the
+    ledger record, leaves the epoch's rows in the table and its offsets
+    unpublished. The ingestor rebuilt from disk fetches that page again
+    under the same epoch, and the upsert sink merges it into the rows
+    already there, so the drain equals an uninterrupted one."""
+    path, first, _, _ = staging
+
+    def ingestor(table: str) -> SnowflakeLikeIngestor:
+        cfg = _cfg(table, query_size=60)
+        return SnowflakeLikeIngestor(
+            spark, cfg, path, str(tmp_path / table), "o_orderkey", mode="offset"
+        )
+
+    def mid_commit(*a, **k):
+        raise RuntimeError("injected crash")
+
+    want = ingestor(_uniq("t_ref"))
+    want.run_until_drained()
+
+    table = _uniq("t_mid")
+    ing = ingestor(table)
+    assert ing.run_cycle().rows_ingested > 0
+    committed = ing.load_offsets()
+    ing.sink._record = mid_commit
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ing.run_cycle()
+
+    resumed = ingestor(table)
+    assert resumed.load_offsets() == committed
+    assert resumed.sink.read().count() > sum(committed.values())
+    resumed.run_until_drained()
+    got, ref = resumed.sink.read(), want.sink.read()
+    assert got.count() == ref.count() == first.count()
+    assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
+
+
+def test_expire_commits_keeps_the_live_offsets(spark, staging, tmp_path):
+    """After an offset-mode drain, ``expire_commits(keep_last=1)`` keeps
+    the newest record, which carries the live offsets: an ingestor
+    rebuilt from disk resumes past every committed row, so a second drain
+    into the append sink adds none. ``keep_last=0`` would empty the
+    ledger and restart the offsets at 0, so it is refused. The offsets
+    live only in the ledger: ``state_dir`` gets no ``offsets.*``."""
+    path, first, _, _ = staging
+    cfg = _cfg(_uniq("t_expire_live"), operation="append", query_size=60)
+
+    def ingestor() -> SnowflakeLikeIngestor:
+        return SnowflakeLikeIngestor(
+            spark, cfg, path, str(tmp_path / "state"), "o_orderkey", mode="offset"
+        )
+
+    ing = ingestor()
+    ing.run_until_drained()
+    hi = ing.sink.last_epoch()
+    assert hi > 1
+    assert not list(tmp_path.glob("state/offsets*"))
+    with pytest.raises(ValueError, match="keep_last"):
+        ing.sink.expire_commits(keep_last=0)
+    assert spark.table(ing.sink.commits).count() == hi
+    ing.sink.expire_commits(keep_last=1)
+    ledger = spark.table(ing.sink.commits)
+    assert ledger.columns == ["epoch"]
+    assert [r.epoch for r in ledger.collect()] == [hi]
+
+    resumed = ingestor()
+    assert resumed.sink.last_epoch() == hi
+    assert sum(resumed.load_offsets().values()) == first.count()
+    assert sum(s.rows_ingested for s in resumed.run_until_drained()) == 0
+    got = resumed.sink.read()
+    assert got.count() == got.select("o_orderkey").distinct().count() == first.count()
 
 
 def test_dead_letter_replay_writes_each_row_once(spark, tmp_path):
@@ -846,8 +926,8 @@ def test_iceberg_commit_sequence_recorded(spark):
         "o_orderpriority",
     )
     rec._like_schema = orders.schema
-    cfg = _cfg(_uniq("t_icerec")).sink
-    sink = CatalogSink(rec, cfg, version_column="o_orderdate", snapshots=True)
+    cfg = replace(_cfg(_uniq("t_icerec")).sink, snapshots=True)
+    sink = CatalogSink(rec, cfg, version_column="o_orderdate")
     assert sink.iceberg, "proxy must register as an Iceberg session"
     try:
         b1 = orders.limit(50)
@@ -878,9 +958,7 @@ def test_iceberg_commit_sequence_recorded(spark):
         assert seq2[1].endswith("CREATE OR REPLACE TAG `epoch_2`")
 
         # restart parity: a NEW sink over the same ledger skips both
-        sink2 = CatalogSink(
-            rec, cfg, version_column="o_orderdate", snapshots=True
-        )
+        sink2 = CatalogSink(rec, cfg, version_column="o_orderdate")
         n = len(rec.recorded)
         assert sink2.write_batch(b1, epoch=1) == "skipped-replay"
         assert sink2.write_batch(b1, epoch=2) == "skipped-replay"
@@ -1045,6 +1123,44 @@ def test_expire_commits_keeps_trailing_window(spark, staging, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {sink.commits}")
 
 
+def test_expire_commits_deletes_only_wholly_expired_files(spark, staging):
+    """A ledger file that Spark rewrote holds several epochs and no
+    offsets. Expiry deletes it only once every epoch in it is past the
+    window, and the ledger table reads it beside the newer records. The
+    newest record that carries offsets is kept outside the window too."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path, first, rest, orders = staging
+    cfg = _cfg(_uniq("t_expire_old"), operation="append").sink
+    sink = CatalogSink(spark, cfg)
+    loc = sink._ledger_location()
+    os.makedirs(loc)
+    old = pa.table({"epoch": pa.array([1, 2, 3], pa.int64())})
+    pq.write_table(old, os.path.join(loc, "part-00000-rewritten.parquet"))
+    small = first.limit(10)
+    sink.progress = {"1-URGENT": 10}
+    for e in range(4, 9):
+        sink.write_batch(small, epoch=e)
+
+    def kept() -> list[int]:
+        return sorted(r.epoch for r in spark.table(sink.commits).collect())
+
+    try:
+        assert kept() == list(range(1, 9))
+        sink.expire_commits(keep_last=6)  # epochs 1 and 2 share a file with 3
+        assert kept() == list(range(1, 9))
+        sink.expire_commits(keep_last=5)
+        assert kept() == [4, 5, 6, 7, 8]
+        assert not sink._committed(3) and sink.last_epoch() == 8
+        sink.expire_commits(keep_last=1)
+        assert kept() == [4, 8]
+        assert CatalogSink(spark, cfg).committed_offsets() == {"1-URGENT": 10}
+    finally:
+        for name in (sink.table, sink.commits):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
 def test_iceberg_compact_sql_generation(spark):
     cfg = _cfg(_uniq("t_icecompact"))
     sink = CatalogSink(spark, cfg.sink)
@@ -1089,9 +1205,8 @@ def test_snapshot_time_travel_reconstructs_each_epoch(spark):
     reconstructible."""
     sink = CatalogSink(
         spark,
-        _cfg(_uniq("t_tt")).sink,
+        replace(_cfg(_uniq("t_tt")).sink, snapshots=True),
         version_column="o_orderdate",
-        snapshots=True,
     )
     orders = load_table(spark, SF, "orders")
     batches = [
@@ -1157,9 +1272,8 @@ def test_snapshot_replay_is_idempotent(spark):
     leave the history identical, never doubled."""
     sink = CatalogSink(
         spark,
-        _cfg(_uniq("t_ttr")).sink,
+        replace(_cfg(_uniq("t_ttr")).sink, snapshots=True),
         version_column="o_orderdate",
-        snapshots=True,
     )
     orders = load_table(spark, SF, "orders")
     batch = orders.filter(F.col("o_orderpriority") == "1-URGENT").limit(30)
@@ -1178,8 +1292,8 @@ def test_iceberg_time_travel_sql_generation(spark):
     its snapshot with the epoch and read_as_of addresses the tag — the
     generated SQL must carry both halves."""
     sink = CatalogSink(
-        spark, _cfg(_uniq("t_ice_tt")).sink,
-        version_column="o_orderdate", snapshots=True,
+        spark, replace(_cfg(_uniq("t_ice_tt")).sink, snapshots=True),
+        version_column="o_orderdate",
     )
     tag = sink.iceberg_tag_sql(7)
     assert tag.startswith(f"ALTER TABLE {sink.table} ")
@@ -1271,8 +1385,8 @@ def test_purge_keys_erases_live_and_history(spark, tmp_path):
         CatalogSink,
     )
 
-    cfg = _cfg(_uniq("t_purge")).sink
-    sink = CatalogSink(spark, cfg, version_column="o_orderdate", snapshots=True)
+    cfg = replace(_cfg(_uniq("t_purge")).sink, snapshots=True)
+    sink = CatalogSink(spark, cfg, version_column="o_orderdate")
     orders = load_table(spark, SF, "orders")
     half = orders.filter(F.col("o_orderkey") % 2 == 0)
     try:
@@ -1316,8 +1430,8 @@ def test_purge_keys_survives_static_session_mode(spark):
     forced to 'static' (simulating a crash between snapshot expiry's
     set/restore, or any external caller), purge_keys must still remove
     ONLY the purged key — not every partition that contained no key."""
-    cfg = _cfg(_uniq("t_purge_static")).sink
-    sink = CatalogSink(spark, cfg, version_column="o_orderdate", snapshots=True)
+    cfg = replace(_cfg(_uniq("t_purge_static")).sink, snapshots=True)
+    sink = CatalogSink(spark, cfg, version_column="o_orderdate")
     orders = load_table(spark, SF, "orders")
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, "static")
@@ -1345,8 +1459,8 @@ def test_purge_keys_null_key_rejected_before_mutation(spark):
     """NULL key values can never match the purge anti-join (the rows would
     silently survive), so purge_keys must validate up front and leave BOTH
     tables untouched — no half-applied purge."""
-    cfg = _cfg(_uniq("t_purge_null")).sink
-    sink = CatalogSink(spark, cfg, version_column="o_orderdate", snapshots=True)
+    cfg = replace(_cfg(_uniq("t_purge_null")).sink, snapshots=True)
+    sink = CatalogSink(spark, cfg, version_column="o_orderdate")
     orders = load_table(spark, SF, "orders")
     try:
         sink.write_batch(orders, 1)
@@ -1434,9 +1548,9 @@ def test_iceberg_commit_discipline_stub_catalog(spark):
     neither merge nor tag; a second epoch merges and tags again."""
     table = _uniq("ice_stub")
     batch = load_table(spark, SF, "orders").limit(50)
-    cfg = _cfg(table).sink
+    cfg = replace(_cfg(table).sink, snapshots=True)
     stub = _IcebergStubSession(spark, f"default.{table}", batch)
-    sink = CatalogSink(stub, cfg, version_column="o_orderdate", snapshots=True)
+    sink = CatalogSink(stub, cfg, version_column="o_orderdate")
     try:
         assert sink.iceberg, "stub session must probe as Iceberg-capable"
 
@@ -1495,8 +1609,9 @@ def test_sink_overwrites_ignore_a_static_session_mode(spark, monkeypatch):
     )
     urgent = orders.filter(pcol == "1-URGENT")
     up = CatalogSink(
-        spark, _cfg(_uniq("t_hostile")).sink, version_column="o_orderdate",
-        snapshots=True,
+        spark,
+        replace(_cfg(_uniq("t_hostile")).sink, snapshots=True),
+        version_column="o_orderdate",
     )
     ow = CatalogSink(
         spark,
@@ -1604,8 +1719,8 @@ def test_dropped_partitions_stay_gone_after_reattach(spark):
     their files, and a restarted driver's reattach recovers every
     partition directory it finds. A partition emptied by purge_keys and a
     snapshot removed by expire_snapshots must not come back that way."""
-    cfg = _cfg(_uniq("t_reattach")).sink
-    sink = CatalogSink(spark, cfg, version_column="o_orderdate", snapshots=True)
+    cfg = replace(_cfg(_uniq("t_reattach")).sink, snapshots=True)
+    sink = CatalogSink(spark, cfg, version_column="o_orderdate")
     orders = load_table(spark, SF, "orders")
     pcol = F.col("o_orderpriority")
 
@@ -1633,7 +1748,7 @@ def test_dropped_partitions_stay_gone_after_reattach(spark):
 
         for t in (sink.table, sink.commits, sink.history):
             spark.sql(f"DROP TABLE {t}")  # external: the files stay
-        again = CatalogSink(spark, cfg, version_column="o_orderdate", snapshots=True)
+        again = CatalogSink(spark, cfg, version_column="o_orderdate")
         again.ensure_table(orders)
         assert state(again) == (live, hist)
     finally:
@@ -1646,8 +1761,8 @@ def test_diff_versions_classifies_changes(spark, tmp_path):
     updated / unchanged classification with NULL-safe value comparison,
     and counts conserve the union of both states."""
     table = _uniq("diff")
-    cfg = _cfg(table).sink
-    sink = CatalogSink(spark, cfg, version_column="O_ORDERDATE", snapshots=True)
+    cfg = replace(_cfg(table).sink, snapshots=True)
+    sink = CatalogSink(spark, cfg, version_column="O_ORDERDATE")
     schema = (
         "o_orderkey long, o_orderpriority string, o_orderdate string, v string"
     )

@@ -1428,8 +1428,9 @@ def test_diff_versions_equi_join_only(spark, tmp_path):
         partition_fields=("o_orderpriority",),
         upsert_fields=("o_orderkey", "o_orderpriority"),
         operation="upsert",
+        snapshots=True,
     )
-    sink = CatalogSink(spark, cfg, version_column="o_orderdate", snapshots=True)
+    sink = CatalogSink(spark, cfg, version_column="o_orderdate")
     orders = load_table(spark, SF, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate", "o_orderpriority"
     )
